@@ -55,193 +55,27 @@ def _driver_checked() -> set[str]:
     return checked
 
 
-# Queries whose PLAN or ORACLE changed after round N (the value): a green
-# row from a round <= N no longer certifies the current code, so these
-# jump to the very front of the gate until a round > N re-greens them
-# (self-clearing — no manual list maintenance next round).
-# Changed after r3: q76 decimal-width pin; q40/q84 gained replayed-sketch
-# oracles; q08/q50/q135/q182/q183 were de-vacuified (filters changed on
-# both sides).
-# Changed after r4: q76/q157 no longer emit DECIMAL output columns (the
-# pandas-layer Decimal-vs-float64 dtype gap the driver hash cannot
-# reconcile — VERDICT r4 item 1); q196 serializes its positions array to
-# a comma-joined string (driver canonicalizer crashed on list cells);
-# q192's oracle gained the NULL-text coalesce (ADVICE r4).
-# Changed after r5: q201's oracle centroid pick mirrored to
-# ORDER BY vec_id LIMIT K (ADVICE r5 — was WHERE vec_id < K).
+# Queries whose plan or oracle changed after round V (the value): a green
+# row from a round <= V does not certify the current code, so each entry
+# jumps to the front of the gate until a round > V re-greens it (see
+# _reverify). Once re-greened an entry is inert; reset the dict rather
+# than let history pile up.
+# Value 11: the bounded driver-path sites moved onto one byte budget
+# (functions.core.fits_on_driver), and q368/q394 lost their broadcast
+# tiers; the q68-family entries reach connected_components.
 _CHANGED_AFTER_ROUND = {
-    # r10: the six constant-lake duplicate-PK artifact queries now load
-    # their keyed table through catalog.load_table_pk (a loud
-    # DuplicateKeyError guard on PK-violating input — VERDICT r9 item 2).
-    # On valid lakes results are bit-identical (the guard is one cached
-    # count/count-distinct aggregate that passes silently); fronted
-    # anyway per the conservative rotation discipline. Value 10 + the
-    # latest-recorded-round guard keeps them OUT of the r10 gate
-    # (budgeted 18 re-verify + 32 never-sampled) and fronts them in r11
-    # (17 never-sampled remain + these 6 = 23 of 50 slots).
-    "q64_winnow_fingerprints": 10,
-    "q107_recursive_cte": 10,
-    "q118_audio_window_energy": 10,
-    "q203_kmeans_clusters": 10,
-    "q238_ivf_nprobe_plan": 10,
-    "q332_bm25_tuning_plan": 10,
-    # r11 OPTIMIZATION round — execution-strategy-only changes (results
-    # bit-identical; every one mirror-verified against the DuckDB oracle
-    # on the optimized tree, and the new tests/test_driver_paths.py pins
-    # driver-vs-distributed path equality): guarded driver-side fixed
-    # points for the bounded graph loops (q368/q394/q382 — q398
-    # precedent), thread-pool detector builds in the audit composites
-    # (q367/q225/q277/q354), ONE shared q24 relation inside q404 (and
-    # the q387 body refactored into a shared helper, plan unchanged),
-    # distributed exact-NTILE for q337 (q396 machinery), a single-pass
-    # mapInArrow sim matrix + guarded driver greedy for q426, and a
-    # guarded driver greedy for q202's MMR loop. Value 10: these land
-    # BEFORE the r11 gate runs, so r11 greens certify the new code
-    # (the r8 batch precedent below).
-    "q367_cochran_q": 10,
-    "q225_lsh_dedup_audit": 10,
-    "q277_detector_agreement": 10,
-    "q354_dup_capture_recapture": 10,
-    "q404_fs_linkage_scoring": 10,
-    "q387_fellegi_sunter_weights": 10,
-    "q337_zorder_skip_estimate": 10,
-    "q382_kcore_peel": 10,
-    # r10 OPTIMIZATION round, wave 1+2 — execution-strategy-only changes
-    # (builder-run 432-test oracle suite green on the optimized code, see
-    # OPTIMIZATION_r10.md; the r10 driver pytest gate itself timed out, so
-    # the claim is pending the r11 gate re-greening every value-10 entry):
-    # broadcast
-    # node-value joins in the HITS/LPA loops, driver-side bounded
-    # recurrence for the taxonomy-sized PageRank (q350 pattern),
-    # union-find small-graph path in connected_components (q68 and its
-    # q214/q243/q349/q417/q425 inheritors), per-step lineage truncation
-    # in the MMR greedy loop, Arrow-batched sequential-fold cosine in
-    # the q59/q411/q426 verify paths, and a partial-Gram mapInArrow
-    # pass for q422. Fronted per the conservative rotation discipline.
-    "q123_pagerank_transitions": 10,
-    "q368_hits_hubs_authorities": 10,
-    "q394_label_propagation": 10,
-    "q398_pagerank_exact": 10,
-    "q422_embedding_effective_rank": 10,
-    "q411_similarity_margin": 10,
-    "q202_mmr_rerank": 10,
-    "q59_embedding_near_dup_lsh": 10,
-    "q68_dup_clusters": 10,
-    "q214_dup_cluster_histogram": 10,
-    "q417_split_leakage_audit": 10,
-    "q425_dedup_token_budget": 10,
-    "q243_golden_record": 10,
-    "q349_cluster_agreement": 10,
-    # r9: the last eleven 1-row-lake divide-by-zero fixes (try_divide ->
-    # NULL for n=1-undefined statistics, the same pattern as the 31 done
-    # in r8; non-degenerate results mirror-verified bit-identical at
-    # sf0.001 AND sf0.01). Value 9 + the latest-recorded-round guard in
-    # _reverify keeps them OUT of the r9 gate (budgeted for 50
-    # never-sampled queries) and fronts them in the r10 gate.
-    # r9: q426's shortlist is now LEARNED cluster representatives (q47
-    # quantizer, 50 centroids) — results CHANGE (different candidates);
-    # q396's composite (vlong, vdbl) sort value replaces the lone double
-    # cast (identical results on 2^53-safe keys; re-verify anyway). Both
-    # mirror-certified at sf0.001 + sf0.01 and probed at rows 0/1.
-    # (value was 9 for the r9 learned-candidate change; bumped to 10 for
-    # the r10 pair_cosine_arrow sim-matrix swap — results identical)
-    "q426_facility_location_coreset": 10,
-    "q396_sort_key_plan": 9,
-    # r9: 2-row-lake probe sweep — q316's paired-difference se has an
-    # n-1 dof that a 1-cell arm zeroes (try_divide fix; q404/q429 fixed
-    # the same way are never-sampled, so their first gate sampling
-    # certifies the new code at zero slot cost).
-    "q316_aa_test_readout": 9,
-    # r9: constant-lake (1 row x32) probe sweep — zero-variance/all-tied
-    # statistics that pass the n-1/n-2 dof guards: q95's F.corr RAISES
-    # ANSI DIVIDE_BY_ZERO on a constant group (rewritten covar/sd·sd
-    # under try_divide), q241's log2(1)=0 entropy normalizer, q353's
-    # zero hypergeometric variance, q379's zero Fisher information
-    # (Python loop now mirrors the oracle's NULL propagation).
-    "q95_stats_moments": 9,
-    "q241_transition_entropy": 9,
-    "q353_logrank_test": 9,
-    "q379_cox_hazard_newton": 9,
-    "q169_ks_drift": 9,
-    "q208_bigram_perplexity": 9,
-    "q211_woe_iv": 9,
-    "q212_target_encoding": 9,
-    "q228_class_balanced_sample": 9,
-    "q240_roc_auc": 9,
-    "q247_bootstrap_ci": 9,
-    "q248_jackknife_influence": 9,
-    "q250_power_mde": 9,
-    "q268_sequential_ab_looks": 9,
-    "q282_auc_bootstrap_ci": 9,
-    # r8 changes land BEFORE the round-8 driver gate runs, so a round-8
-    # green DOES certify the new code: the value is 7 ("greens from
-    # rounds <= 7 don't certify"), which fronts everything below for
-    # the r8 gate exactly once and self-clears the moment
-    # CORRECTNESS_r08 records them green — no wasted r9 slots.
-    # (q396/q426 carried value-7 entries for their r8 rewrites; both
-    # re-greened in r08 and changed AGAIN in r9 — superseded by the
-    # value-9 entries below.)
-    # r8 batch-3 1-row-lake guards (commit e647904) — landed before the
-    # r8 gate ran, so their r08 greens certify the new code; recorded
-    # here anyway (ADVICE r8) so certification does not rest on gate
-    # timing: the entries self-clear against the existing r08 greens.
-    "q291_gain_chart": 7,
-    "q296_dup_quality_correlation": 7,
-    "q299_scorer_rank_agreement": 7,
-    "q303_basket_cap_plan": 7,
-    "q306_mann_whitney": 7,
-    # r8: q419 output UNITS changed (ce/excess now true milli-nats, the
-    # q429 convention — ADVICE r7); all others below are empty-lake /
-    # degenerate-lake parity guards (ADVICE r7 q415/q421 generalized to
-    # the whole class found by the new empty-lake sweep): HAVING/WHERE
-    # guards on oracle tails, try_divide / coalesce on Spark tails.
-    # Non-empty results are IDENTICAL (mirror-verified 24/24 at two
-    # SFs); fronted anyway per the conservative rotation discipline.
-    "q419_domain_mixture_plan": 7,
-    "q15_rollup": 7,
-    "q16_cube": 7,
-    "q38_grouping_sets": 7,
-    "q129_grouping_id": 7,
-    "q160_fk_integrity_audit": 7,
-    "q200_dataset_card": 7,
-    "q236_lsh_parameter_plan": 7,
-    "q251_heaps_law_fit": 7,
-    "q300_corpus_scorecard": 7,
-    "q312_srm_check": 7,
-    "q313_benford_audit": 7,
-    # (q316/q353/q379 carried value-7 entries here for their r8
-    # empty-lake guards; re-greened in r08 and changed AGAIN in r9 —
-    # superseded by the value-9 entries above, removed so the dict
-    # literal's last-key-wins rule cannot silently downgrade them.)
-    "q318_rec_coverage": 7,
-    "q330_join_size_estimate": 7,
-    "q350_markov_attribution": 7,
-    "q401_gmm_em": 7,
-    "q402_poisson_trend_glm": 7,
-    "q412_dedup_transitivity": 7,
-    "q415_logistic_quality_irls": 7,
-    "q418_chimerge_binning_plan": 7,
-    "q421_bpe_compression_curve": 7,
-    # (q368 carried a value-7 entry for its r7 single-partition collapse;
-    # re-greened in r08 and changed AGAIN in r10 — superseded by the
-    # value-10 entry above, removed so last-key-wins cannot downgrade it.)
-    # r7: feature relations localCheckpoint'ed instead of persist+count
-    # (execution-strategy only — identical results; re-verify anyway)
-    "q191_incremental_dedup": 7,
-    "q230_bt_preference": 6,  # r6: empty-lake guard (k==0 early return)
-    "q237_kmv_source_overlap": 6,  # r6: hash-before-distinct rewrite
-    "q201_semdedup": 5,
-    "q76_incremental_rollup": 4,
-    "q157_decimal_money": 4,
-    "q196_inverted_index": 4,
-    "q192_gopher_quality_rules": 4,
-    "q40_approx_distinct": 3,
-    "q84_hll_sketch_algebra": 3,
-    "q182_tpch_q2": 3,
-    "q183_tpch_q11": 3,
-    "q08_anti_join": 3,
-    "q50_scalar_subquery": 3,
-    "q135_tpch_q7": 3,
+    "q337_zorder_skip_estimate": 11,
+    "q368_hits_hubs_authorities": 11,
+    "q382_kcore_peel": 11,
+    "q394_label_propagation": 11,
+    "q426_facility_location_coreset": 11,
+    "q202_mmr_rerank": 11,
+    "q68_dup_clusters": 11,
+    "q214_dup_cluster_histogram": 11,
+    "q243_golden_record": 11,
+    "q349_cluster_agreement": 11,
+    "q417_split_leakage_audit": 11,
+    "q425_dedup_token_budget": 11,
 }
 
 

@@ -11,12 +11,19 @@ A pandas_udf variant is kept only to exercise the vectorized UDF surface.
 from __future__ import annotations
 
 import hashlib
+import logging
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+logger = logging.getLogger(__name__)
+
+# The one size budget for every bounded driver-side path: a relation is
+# collected only while it fits one broadcast-sized buffer.
+DRIVER_COLLECT_BYTES = 64 << 20
 
 
 def pseudonymize(col: Column | str) -> Column:
@@ -129,3 +136,34 @@ def round_half_up(col: Column | str, digits: int) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     m = float(10**digits)
     return F.floor(c * m + 0.5) / m
+
+
+def fits_on_driver(site: str, *relations: tuple[int, int], budget: int | None = None) -> bool:
+    """Whether ``site`` should collect its relations and finish on the
+    driver (numpy or plain Python) instead of looping in Spark.
+
+    Each relation is ``(rows, columns)``. Every column these sites
+    collect is a long or a double, so the estimate is rows x 8 B x
+    columns, summed over the relations. The budget is
+    ``DRIVER_COLLECT_BYTES`` (64 MiB); a caller may pass a tighter
+    ``budget``, which that constant still caps, so setting the constant
+    to 0 sends every non-empty site to its distributed path. At 64 MiB
+    a two-long edge list fits ~4.2M edges, and q426's three-long sim
+    cells ~2.8M cells.
+
+    Callers pass counts they already have (no extra Spark job) and keep
+    their own collect and their own empty-input condition; this only
+    decides, and logs the decision.
+    """
+    est = 8 * sum(rows * cols for rows, cols in relations)
+    cap = DRIVER_COLLECT_BYTES if budget is None else min(budget, DRIVER_COLLECT_BYTES)
+    fits = est <= cap
+    logger.info(
+        "driver-path site=%s rows=%s est_bytes=%d budget=%d path=%s",
+        site,
+        "+".join(str(rows) for rows, _ in relations),
+        est,
+        cap,
+        "driver" if fits else "distributed",
+    )
+    return fits

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.core import fits_on_driver
+
 
 # ── text normalization + shingling (shared building blocks) ─────────────────
 
@@ -690,19 +692,20 @@ def connected_components(
     # Small-graph collapse: dedup edge lists are usually TINY relative
     # to the corpus (sf0.1 profile: 256 edges from 5,000 docs, yet the
     # 32-partition propagation rounds cost 4.6 s of pure task-scheduling
-    # overhead). Below the threshold (~MBs of long pairs — the same
-    # bound that used to gate the single-partition loop) the component
-    # labels are computed on a DRIVER-SIDE copy with union-find: the
-    # result — min node id per component — is exactly the converged
-    # min-label fixpoint the loop reaches AND exactly the oracle's
-    # recursive-CTE transitive-closure semantics (least(a, min
+    # overhead). While the symmetric pair list fits the driver budget,
+    # the component labels are computed on a DRIVER-SIDE copy with
+    # union-find: the result — min node id per component — is exactly
+    # the converged min-label fixpoint the loop reaches AND exactly the
+    # oracle's recursive-CTE transitive-closure semantics (least(a, min
     # reachable)), with none of the per-round join/aggregate/count jobs
     # (guide §8: decide with small rows; the per-round loop was 8-12
     # Spark jobs over kilobytes). The count is on the already-persisted
     # relation (no extra pass over the corpus); big graphs keep the
     # partitioned propagation loop below, whose per-round cost is what
-    # actually scales to 100 TB.
-    if sym.count() <= 200_000:
+    # actually scales to 100 TB. The budget here is tighter than the
+    # global one (200k pairs x 16 B): the driver side is pure-Python
+    # union-find, and nobody has measured it above 200k pairs.
+    if fits_on_driver("connected_components", (sym.count(), 2), budget=200_000 * 16):
         # read from the persisted relation (never the upstream lineage)
         pair_rows = sym.collect()  # bounded by the guard above
         sym.unpersist()

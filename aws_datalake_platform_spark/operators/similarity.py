@@ -1087,13 +1087,6 @@ def mmr_rerank(
     return mmr_over_candidates(cand, corpus, id_col, vec_col, k=k, lam=lam)
 
 
-# Driver-side MMR greedy while the checkpointed candidate/pair relations
-# fit a bounded collect (guide §8); module-level so tests can force the
-# distributed unrolled loop and pin both paths equal.
-_MMR_DRIVER_CAND_BOUND = 500_000
-_MMR_DRIVER_PAIR_BOUND = 2_000_000
-
-
 def mmr_over_candidates(
     cand: DataFrame,
     corpus: DataFrame,
@@ -1109,7 +1102,7 @@ def mmr_over_candidates(
     embedding column used for the pairwise diversity penalty. Same
     unrolled join+window steps and localCheckpoint plan-bounding as
     mmr_rerank (whose docstring has the measured rationale)."""
-    from ..functions.core import round_half_up
+    from ..functions.core import fits_on_driver, round_half_up
 
     vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -1149,19 +1142,20 @@ def mmr_over_candidates(
         .localCheckpoint(eager=True)
     )
     slim = cand.select("query_id", "neighbor_id", "rel")
-    # Driver-side greedy below a bounded-collect guard (r11; guide §8 —
-    # the q398/union-find precedent): the k greedy steps read nothing but
-    # the ANN-bounded (query, cand, rel) and (query, a, b, sim) relations
-    # (k*n and k*n^2 rows per query — both already checkpointed above),
-    # yet each step previously ran its own join+window+checkpoint Spark
-    # job. Score arithmetic is the identical double sequence (lam*rel -
-    # (1-lam)*pen, floor-half-up at 1e6), pen is a max over the SAME
-    # rounded sims, and tie-breaks compare the same values — so picks and
-    # scores are bit-identical. Many-query workloads past the guard keep
-    # the distributed unrolled loop — the scale path.
+    # Driver-side greedy while both relations fit the driver budget
+    # (r11; guide §8 — the q398/union-find precedent): the k greedy
+    # steps read nothing but the ANN-bounded (query, cand, rel) and
+    # (query, a, b, sim) relations (k*n and k*n^2 rows per query — both
+    # already checkpointed above), yet each step previously ran its own
+    # join+window+checkpoint Spark job. Score arithmetic is the
+    # identical double sequence (lam*rel - (1-lam)*pen, floor-half-up at
+    # 1e6), pen is a max over the SAME rounded sims, and tie-breaks
+    # compare the same values — so picks and scores are bit-identical.
+    # Many-query workloads past the budget keep the distributed
+    # unrolled loop — the scale path.
     n_pairs = pairs.count()
     n_cand = cand.count()
-    if 0 < n_cand <= _MMR_DRIVER_CAND_BOUND and n_pairs <= _MMR_DRIVER_PAIR_BOUND:
+    if 0 < n_cand and fits_on_driver("mmr_over_candidates", (n_cand, 3), (n_pairs, 4)):
         import math
 
         one_minus = 1.0 - lam

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, load_table_pk
-from ..functions.core import round_half_up
+from ..functions.core import fits_on_driver, round_half_up
 from .queries import register
 
 # ── q323: Chao1 / Good-Turing vocabulary-richness estimation ────────────────
@@ -1756,10 +1756,6 @@ def q336_ipw_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ── q337: z-order vs insert-order file-skipping estimate ────────────────────
 
 _Q337_CHUNKS = 256
-# Driver-side zone maps while the five decision columns fit a bounded
-# collect (~32 MB at the bound); module-level so tests can force the
-# distributed exact-NTILE machinery and pin both paths equal.
-_Q337_DRIVER_ROW_BOUND = 4_000_000
 # predicate box, valid (non-empty) at every SF: partkey and suppkey both
 # start at 1 in TPC-H-shaped data
 _Q337_PK = (20, 60)
@@ -1858,13 +1854,14 @@ def q337_zorder_skip_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both chunk layouts previously ran NTILE over a GLOBAL
     # Window.orderBy, i.e. two full-table one-task sorts. Two
     # scale-correct paths replace them:
-    #  - below the bounded-collect guard, the zone maps are computed
-    #    DRIVER-SIDE: the decision inputs are five integer columns
-    #    (sort keys + the two zone-mapped keys), the output is 2x256
-    #    min/max rows, and exact NTILE over numpy lexsort is the
-    #    identical integer algebra (guide §8 — the q398/union-find
-    #    precedent; measured: the q396-style machinery alone costs more
-    #    than the whole query at sf0.1, the driver pass ~0.1 s);
+    #  - when the four key columns fit the driver budget
+    #    (fits_on_driver), the zone maps are computed DRIVER-SIDE: the
+    #    decision inputs are integer columns (sort keys + the two
+    #    zone-mapped keys), the output is 2x256 min/max rows, and
+    #    exact NTILE over numpy lexsort is the identical integer
+    #    algebra (guide §8 — the q398/union-find precedent; measured:
+    #    the q396-style machinery alone costs more than the whole query
+    #    at sf0.1, the driver pass ~0.1 s);
     #  - above it, q396's range-partitioned exact-NTILE machinery
     #    (explode per-ordering legs, repartitionByRange on the unique
     #    tuple, ranges frozen by localCheckpoint, global ranks from
@@ -1873,7 +1870,7 @@ def q337_zorder_skip_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    bit-identical on both paths (the sort tuple is unique, so
     #    ranks have no ties).
     n_rows = src.count()
-    if 0 < n_rows <= _Q337_DRIVER_ROW_BOUND:
+    if 0 < n_rows and fits_on_driver("q337_zorder_skip_estimate", (n_rows, 4)):
         import numpy as np
 
         # collect only the four key columns; the Morton key is the same
@@ -6089,11 +6086,6 @@ def _cochran_q(mh: DataFrame, sh: DataFrame, ng: DataFrame) -> DataFrame:
 _Q368_ITERS = 8
 _Q368_SCALE = 1_000_000
 _Q368_TOPK = 15
-# Driver-side fixed point while the DISTINCT edge relation fits one
-# broadcast-sized buffer (~64 MB of long pairs — the same bound that
-# gates the r10 broadcast variant); module-level so tests can force the
-# distributed path and pin both paths equal.
-_Q368_DRIVER_EDGE_BOUND = 4_000_000
 
 
 def _q368_sql() -> str:
@@ -6171,28 +6163,19 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Iteration-tail collapse (the connected_components idiom and its
-    # 200k threshold): 16 half-steps of 32-partition joins over a tiny
-    # edge relation cost pure task-scheduling overhead, so run the loop
-    # single-partition when the materialized edges fit one partition by
-    # a huge margin (integer sums and maxes are partitioning-invariant).
-    # The sf0.1 graph (~590k distinct customer-part edges) stays on the
-    # partitioned path — measured: forcing it single-partition is ~1.5x
-    # SLOWER (9.4M single-threaded row-joins), the threshold is real.
     n_edges = edges.count()
-    # Driver-side fixed point below the SAME 4M-edge bound that gates the
-    # broadcast variant (r11; guide §8 / §1.2 — the q398/union-find
-    # precedent): when the whole DISTINCT edge relation fits one
-    # broadcast-sized buffer (<= ~64 MB of long pairs), 16 half-step
-    # join+agg+checkpoint Spark jobs are pure job-scheduling overhead —
-    # the r10 scaling block measured 8 cores FASTER than 32 on this very
-    # query (ratio 0.87). Integer scatter-adds and truncating integer
-    # division in numpy/Python are exactly the oracle's BIGINT recurrence
-    # (all terms nonnegative, sums <= edges * SCALE < 2^63), so scores
-    # are bit-identical; the SAME Spark tail expressions below compute
-    # the rounded float score either way. Bigger graphs keep the
-    # distributed loop — that is the 100 TB path.
-    if 0 < n_edges <= _Q368_DRIVER_EDGE_BOUND:
+    # Driver-side fixed point while the DISTINCT edge relation fits the
+    # driver budget (r11; guide §8 / §1.2 — the q398/union-find
+    # precedent): then 16 half-step join+agg+checkpoint Spark jobs are
+    # pure job-scheduling overhead — the r10 scaling block measured 8
+    # cores FASTER than 32 on this very query (ratio 0.87). Integer
+    # scatter-adds and truncating integer division in numpy/Python are
+    # exactly the oracle's BIGINT recurrence (all terms nonnegative,
+    # sums <= edges * SCALE < 2^63), so scores are bit-identical; the
+    # SAME Spark tail expressions below compute the rounded float score
+    # either way. Bigger graphs keep the sort-merge loop — that is the
+    # 100 TB path.
+    if 0 < n_edges and fits_on_driver("q368_hits_hubs_authorities", (n_edges, 2)):
         import numpy as np
 
         pdf = edges.toPandas()
@@ -6221,32 +6204,13 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = spark.createDataFrame(top_h, "hub long, hv long")
         edges.unpersist()
         return _q368_rank_tail(a, h)
-    if n_edges <= 200_000:
-        small = edges.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK)
-        small.count()
-        edges.unpersist()
-        edges = small
-    # Broadcast the node-VALUE side of each half-step join while it
-    # provably fits: the h/a relations are <= distinct hubs/auths <=
-    # n_edges rows of two longs (~16 B each, <= ~64 MB at the 4M-edge
-    # guard), while the edge relation is the big side — broadcasting the
-    # values means the 16 half-step joins never shuffle the edges and
-    # the groupBy aggregates partially map-side (guide §2.4/§3.1: a
-    # broadcast join replaces the shuffle of the large side). The
-    # checkpointed half-step outputs have no stats, so AQE alone keeps
-    # planning sort-merge joins here. Bigger graphs (the 100 TB path)
-    # keep the partitioned joins. Same-session interleaved A/B at sf0.1
-    # (3 rounds each): broadcast 5.9-6.9 s vs sort-merge 8.3-10.2 s;
-    # an additional repartition-respread of the cached edges was
-    # measured SLOWER (7.5-10.5 s) and rejected.
-    bcast = F.broadcast if n_edges <= 4_000_000 else (lambda df: df)
     h = edges.select("hub").distinct().select(
         "hub", F.lit(_Q368_SCALE).cast("long").alias("hv")
     )
     a = None
     for _ in range(_Q368_ITERS):
         ar = (
-            edges.join(bcast(h), "hub")
+            edges.join(h, "hub")
             .groupBy("auth")
             .agg(F.sum("hv").cast("long").alias("raw"))
             # node-bounded; truncate lineage each half-step or the
@@ -6260,7 +6224,7 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"CAST(raw * {_Q368_SCALE} div mx AS BIGINT)").alias("av"),
         )
         hr = (
-            edges.join(bcast(a), "auth")
+            edges.join(a, "auth")
             .groupBy("hub")
             .agg(F.sum("av").cast("long").alias("raw"))
             .localCheckpoint(eager=True)

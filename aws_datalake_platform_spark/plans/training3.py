@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..functions.core import round_half_up
+from ..functions.core import fits_on_driver, round_half_up
 from .queries import register
 
 # ── q379: Cox proportional-hazards fit via exact-replay Newton ───────────────
@@ -571,9 +571,6 @@ def q381_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q382_K = 3
 _Q382_ROUNDS = 8
-# q368's driver-side bound (see training2._Q368_DRIVER_EDGE_BOUND);
-# module-level so tests can force the distributed path.
-_Q382_DRIVER_EDGE_BOUND = 4_000_000
 
 
 def _q382_sql() -> str:
@@ -651,15 +648,14 @@ def q382_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran the whole peel round in ONE task — 6.0 s -> 10.6 s. The
     # sort-merge exchanges ARE this loop's parallelism; they stay on the
     # distributed (100 TB) path.
-    # Driver-side peel below the 4M-edge broadcast bound (r11; guide §8 —
-    # q398/union-find precedent): 8 rounds x (checkpoint + collect) =
-    # 16 Spark jobs of pure scheduling overhead once the DISTINCT edge
-    # relation fits one broadcast-sized buffer (r10 scaling block: 8
-    # cores beat 32 at ratio 0.80). The peel is integer set algebra —
-    # every output column is an exact count — so the replay is
-    # bit-identical by construction.
+    # Driver-side peel while the DISTINCT edge relation fits the driver
+    # budget (r11; guide §8 — q398/union-find precedent): 8 rounds x
+    # (checkpoint + collect) = 16 Spark jobs of pure scheduling overhead
+    # at that size (r10 scaling block: 8 cores beat 32 at ratio 0.80).
+    # The peel is integer set algebra — every output column is an exact
+    # count — so the replay is bit-identical by construction.
     n_edges_total = e.count()
-    if 0 < n_edges_total <= _Q382_DRIVER_EDGE_BOUND:
+    if 0 < n_edges_total and fits_on_driver("q382_kcore_peel", (n_edges_total, 2)):
         import numpy as np
 
         pdf = e.toPandas()
@@ -2092,9 +2088,6 @@ def q393_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q394_ROUNDS = 5
 _Q394_TOPK = 15
-# q368's driver-side bound (see training2._Q368_DRIVER_EDGE_BOUND);
-# module-level so tests can force the distributed path.
-_Q394_DRIVER_EDGE_BOUND = 4_000_000
 
 
 def _q394_sql() -> str:
@@ -2184,21 +2177,16 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Broadcast the node-label side of each half-step join while it
-    # provably fits (<= distinct hubs/auths <= n_edges rows of two longs;
-    # the q368 guard and rationale): the 20 half-step joins then never
-    # shuffle the edge relation. Bigger graphs keep the partitioned path.
     n_edges = e.count()
-    # Driver-side fixed point below the SAME 4M-edge bound that gates the
-    # broadcast variant (r11; guide §8 — q398/union-find precedent): the
-    # r10 scaling block measured 8 cores FASTER than 32 here (ratio
-    # 0.84), i.e. the 20 half-step join+argmax+checkpoint jobs are
-    # job-scheduling overhead, not data work, once the DISTINCT edge
-    # relation fits one broadcast-sized buffer. Modal-label argmax
-    # (count desc, label asc) is pure integer algebra, so the driver
-    # replay is bit-identical; every output column is an exact integer.
-    # Bigger graphs keep the distributed loop — the 100 TB path.
-    if 0 < n_edges <= _Q394_DRIVER_EDGE_BOUND:
+    # Driver-side fixed point while the DISTINCT edge relation fits the
+    # driver budget (r11; guide §8 — q398/union-find precedent): the r10
+    # scaling block measured 8 cores FASTER than 32 here (ratio 0.84),
+    # i.e. the 20 half-step join+argmax+checkpoint jobs are
+    # job-scheduling overhead, not data work, at that size. Modal-label
+    # argmax (count desc, label asc) is pure integer algebra, so the
+    # driver replay is bit-identical; every output column is an exact
+    # integer. Bigger graphs keep the sort-merge loop — the 100 TB path.
+    if 0 < n_edges and fits_on_driver("q394_label_propagation", (n_edges, 2)):
         import numpy as np
 
         pdf = e.toPandas()
@@ -2251,7 +2239,6 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             rows, "rank long, community long, n_customers long, n_parts long"
         ).orderBy("rank")
-    bcast = F.broadcast if n_edges <= 4_000_000 else (lambda df: df)
     h = e.select("hub").distinct().select("hub", F.col("hub").cast("long").alias("lbl"))
     a = None
     # Per-node argmax (max count, ties to the smallest label) as a
@@ -2274,13 +2261,13 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for _ in range(_Q394_ROUNDS):
         a = _argmax(
-            e.join(bcast(h), "hub")
+            e.join(h, "hub")
             .groupBy("auth", "lbl")
             .agg(F.count(F.lit(1)).alias("cnt")),
             "auth",
         ).localCheckpoint(eager=True)
         h = _argmax(
-            e.join(bcast(a), "auth")
+            e.join(a, "auth")
             .groupBy("hub", "lbl")
             .agg(F.count(F.lit(1)).alias("cnt")),
             "hub",

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..functions.core import round_half_up
+from ..functions.core import fits_on_driver, round_half_up
 from .queries import register
 
 # ── q414: DSIR hashed-unigram importance weights (data selection) ───────────
@@ -1969,10 +1969,6 @@ _Q426_KM_ITER = 10
 _Q426_KM_SEED = 42
 _Q426_DIM = 64
 _Q426_SCALE = 1_000_000
-# Driver-side greedy while the N x K integer sim matrix fits one
-# broadcast-sized buffer (~64 MB of int64 cells); module-level so tests
-# can force the distributed loop and pin both paths equal.
-_Q426_DRIVER_CELL_BOUND = 8_000_000
 
 
 def _q426_sql() -> str:
@@ -2236,17 +2232,18 @@ def q426_facility_location_coreset(spark: SparkSession, sf_dir: str) -> DataFram
     n_pts = emb.count()
     selected: list[int] = []
     out_rows: list[tuple] = []
-    # Greedy facility-location selection on the DRIVER below the bounded-
-    # collect guard (r11; guide §8 — the q398/union-find precedent): the
-    # whole 8-step optimizer reads nothing but the N x K INTEGER sim
-    # matrix and the N-long cover vector, so once N*K cells fit a
-    # broadcast-sized buffer (<= 8M cells ~ 64 MB) the per-step
+    # Greedy facility-location selection on the DRIVER while the sim
+    # relation fits the driver budget (r11; guide §8 — the
+    # q398/union-find precedent): the whole 8-step optimizer reads
+    # nothing but the N x K INTEGER sim matrix (v, c, sq) and the N-long
+    # cover vector, so at that size the per-step
     # join+aggregate+argmax+checkpoint jobs (2 per pick) are pure
     # scheduling overhead (r10 scaling block: 8 cores beat 32 at 0.76).
     # Integer max/sum algebra is order-free, so gains and picks are
     # bit-identical; the output projection below is shared. Bigger
     # corpora keep the distributed loop — the 100 TB path.
-    if k_cand and 0 < n_pts * k_cand <= _Q426_DRIVER_CELL_BOUND:
+    n_cells = n_pts * k_cand
+    if 0 < n_cells and fits_on_driver("q426_facility_location_coreset", (n_cells, 3)):
         pdf = sim_plan.toPandas()
         if not len(pdf):  # no valid vectors at all: schema-stable empty
             return spark.createDataFrame(

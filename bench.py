@@ -346,6 +346,30 @@ HEADLINE = [
 ]
 
 
+def prime_udf_workers(spark) -> None:
+    """Prime the Python UDF worker fleet: spawn + pandas/pyarrow import is
+    ~5-10 s across 32 workers and would otherwise bill to the first
+    pandas-UDF query; workers are reused afterwards."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def _noop(s: pd.Series) -> pd.Series:
+        return s
+
+    spark.range(0, 10_000, 1, 32).select(_noop(F.col("id"))).count()
+
+
+def drain(spark, max_wait: float = 30.0) -> None:
+    """Wait for the session to go idle. A query's count() can return while
+    AQE broadcast-subtree jobs it no longer needs are still running; those
+    orphans burn cores into the NEXT query's timing window."""
+    tracker = spark.sparkContext.statusTracker()
+    t0 = time.perf_counter()
+    while tracker.getActiveJobsIds() and time.perf_counter() - t0 < max_wait:
+        time.sleep(0.05)
+
+
 def materialize(df) -> int:
     """Force full execution of every partition without collecting rows to
     the driver (write-free equivalent of a sink)."""
@@ -379,17 +403,7 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # prime the Python UDF worker fleet (spawn + pandas/pyarrow import is
-    # ~5-10 s across 32 workers and would otherwise bill to the first
-    # pandas-UDF query; workers are reused afterwards)
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _noop(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(0, 10_000, 1, 32).select(_noop(F.col("id"))).count()
+    prime_udf_workers(spark)
 
     # JMH-style warmup: run EVERY headline query once at the tiny SF so
     # Janino codegen + JIT compilation of each query's generated classes is
@@ -401,15 +415,6 @@ def main() -> None:
         spec = QUERY_REGISTRY.get(name)
         if spec is not None:
             materialize(spec.fn(spark, warm_dir))
-
-    def drain(max_wait: float = 30.0) -> None:
-        # A query's count() can return while AQE broadcast-subtree jobs it
-        # no longer needs are still running; those orphans burn cores into
-        # the NEXT query's timing window. Wait for the session to go idle.
-        tracker = spark.sparkContext.statusTracker()
-        t0 = time.perf_counter()
-        while tracker.getActiveJobsIds() and time.perf_counter() - t0 < max_wait:
-            time.sleep(0.05)
 
     # Three full timed passes, per-query min across passes. Adjacent repeats
     # of one query both land inside the same external-contention window
@@ -428,7 +433,7 @@ def main() -> None:
         if spec is None:
             return
         spark.catalog.clearCache()
-        drain()
+        drain(spark)
         t0 = time.perf_counter()
         materialize(spec.fn(spark, SF_DIR))
         elapsed = time.perf_counter() - t0
@@ -469,7 +474,7 @@ def main() -> None:
         index_dir = tempfile.mkdtemp(prefix="bench_dedup_index_")
         try:
             spark.catalog.clearCache()
-            drain()
+            drain(spark)
             t0 = time.perf_counter()
             materialize_dedup_index(spark, SF_DIR, index_dir)
             index_materialize_sec = round(time.perf_counter() - t0, 3)
@@ -481,7 +486,7 @@ def main() -> None:
             for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))):
                 for name, fn in FROM_INDEX_AUDITS.items():
                     spark.catalog.clearCache()
-                    drain()
+                    drain(spark)
                     t0 = time.perf_counter()
                     materialize(fn(spark, SF_DIR, index_dir))
                     key = f"{name}_from_index"

@@ -13,10 +13,10 @@ denominators — plus q402's Python ZeroDivisionError) and fixed 31 of
 them plus q402 (commits d013d41/ab72321/e647904); the last 11
 already-driver-green queries (q169 q208 q211 q212 q228 q240 q247 q248
 q250 q268 q282) were deferred to protect the never-sampled gate budget
-and fixed at the END of round 9 (fronted into the r10 gate via
-_CHANGED_AFTER_ROUND=9). A round-9 sweep at --rows 2 then surfaced
-the n-2 statistic class the 0/1-row lakes cannot reach (q316 paired
-se dof, q404 zero-link P/R/F1, q429 zero-x-variance slope), and a
+and fixed at the END of round 9 (re-verified by the r10 gate). A
+round-9 sweep at --rows 2 then surfaced the n-2 statistic class the
+0/1-row lakes cannot reach (q316 paired se dof, q404 zero-link
+P/R/F1, q429 zero-x-variance slope), and a
 CONSTANT-lake sweep (--rows 1 --repeat 32: one row duplicated 32x)
 surfaced the zero-variance-at-large-n class (q95 F.corr ANSI crash,
 q241 log2(1) normalizer, q353 zero variance, q379 zero Fisher

@@ -2,13 +2,13 @@
 """Per-query timing/plan harness for optimization iteration (guide §1).
 
 Times individual registry queries with bench.py's exact discipline
-(clearCache before each pass, drain orphan AQE jobs, warmup pass
-excluded, min over N passes) in ONE session, and optionally writes
+(its UDF-worker prime and drain(), clearCache before each pass, warmup
+pass excluded, min over N passes) in ONE session, and optionally writes
 ``.explain("formatted")`` to a file so plan claims are auditable:
 
     python scripts/qtime.py q368_hits_hubs_authorities q394_label_propagation \
-        [--sf /root/testdata/sf0.1] [--passes 3] [--explain-dir plans/r10] \
-        [--explain-suffix before]
+        [--sf LAKE_DIR] [--passes 3] [--explain-dir plans/r11] \
+        [--explain-suffix after] [--plan-only]
 
 Timing methodology matches bench.py (count() materialization) so the
 numbers are directly comparable to bench_full.json rows.
@@ -21,8 +21,6 @@ import json
 import sys
 import time
 from pathlib import Path
-
-import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -42,31 +40,18 @@ def main() -> int:
 
     from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY
     from aws_datalake_platform_spark.session import get_spark
+    from bench import drain, prime_udf_workers
 
     spark = get_spark(app_name="qtime",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _noop(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(0, 10_000, 1, 32).select(_noop(F.col("id"))).count()
+    prime_udf_workers(spark)
 
     def materialize(df):
         if args.noop:
             df.write.format("noop").mode("overwrite").save()
         else:
             df.count()
-
-    def drain(max_wait: float = 30.0) -> None:
-        tracker = spark.sparkContext.statusTracker()
-        t0 = time.perf_counter()
-        while tracker.getActiveJobsIds() and time.perf_counter() - t0 < max_wait:
-            time.sleep(0.05)
 
     results: dict[str, dict] = {}
     for name in args.names:
@@ -89,7 +74,7 @@ def main() -> int:
         runs = []
         for i in range(args.passes):
             spark.catalog.clearCache()
-            drain()
+            drain(spark)
             spark.sparkContext.setJobDescription(f"{name} pass {i}")
             t0 = time.perf_counter()
             materialize(spec.fn(spark, args.sf))

@@ -1,15 +1,17 @@
-"""r11 focused tests: every operator that gained a guarded DRIVER-SIDE
-fast path this round must produce bit-identical rows on both paths.
+"""Every bounded driver-side path must produce bit-identical rows to the
+distributed loop it short-cuts.
 
-Each test runs the query once normally (sf0.001 sits far below every
-guard, so the driver path executes) and once with the guard monkey-
-patched to 0 (forcing the distributed loop the 100 TB shape uses), then
-compares the collected, canonically-sorted rows."""
+Each case runs the query once normally (sf0.001 sits far below the
+driver budget, so the driver path executes) and once with
+``DRIVER_COLLECT_BYTES`` monkeypatched to 0 (forcing the distributed
+loop that relations over the budget run), then compares the collected,
+canonically-sorted rows."""
 
 from __future__ import annotations
 
 import pytest
 
+from aws_datalake_platform_spark.functions import core
 from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY
 
 from .conftest import SF_SMOKE
@@ -19,77 +21,34 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _run_both(spark, monkeypatch, name, module, attr):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q337_zorder_skip_estimate",
+        "q368_hits_hubs_authorities",
+        "q382_kcore_peel",
+        "q394_label_propagation",
+        "q426_facility_location_coreset",
+        "q202_mmr_rerank",
+        "q68_dup_clusters",
+    ],
+)
+def test_driver_path_equals_distributed(spark, monkeypatch, caplog, name):
     spec = QUERY_REGISTRY[name]
-    fast = _rows(spec.fn(spark, SF_SMOKE))
-    monkeypatch.setattr(module, attr, 0)
-    slow = _rows(spec.fn(spark, SF_SMOKE))
+
+    def run(path):
+        caplog.clear()
+        with caplog.at_level("INFO", logger=core.logger.name):
+            rows = _rows(spec.fn(spark, SF_SMOKE))
+        decisions = [r.getMessage() for r in caplog.records if r.name == core.logger.name]
+        assert decisions and all(d.endswith(f"path={path}") for d in decisions), decisions
+        return rows
+
+    fast = run("driver")
+    monkeypatch.setattr(core, "DRIVER_COLLECT_BYTES", 0)
+    slow = run("distributed")
     assert fast == slow, f"{name}: driver path diverges from distributed path"
     assert fast, f"{name}: vacuous equality (no rows at sf0.001)"
-
-
-def test_q368_driver_path_equals_distributed(spark, monkeypatch):
-    from aws_datalake_platform_spark.plans import training2
-
-    _run_both(
-        spark,
-        monkeypatch,
-        "q368_hits_hubs_authorities",
-        training2,
-        "_Q368_DRIVER_EDGE_BOUND",
-    )
-
-
-def test_q394_driver_path_equals_distributed(spark, monkeypatch):
-    from aws_datalake_platform_spark.plans import training3
-
-    _run_both(
-        spark,
-        monkeypatch,
-        "q394_label_propagation",
-        training3,
-        "_Q394_DRIVER_EDGE_BOUND",
-    )
-
-
-def test_q382_driver_path_equals_distributed(spark, monkeypatch):
-    from aws_datalake_platform_spark.plans import training3
-
-    _run_both(
-        spark, monkeypatch, "q382_kcore_peel", training3, "_Q382_DRIVER_EDGE_BOUND"
-    )
-
-
-def test_q426_driver_path_equals_distributed(spark, monkeypatch):
-    from aws_datalake_platform_spark.plans import training4
-
-    _run_both(
-        spark,
-        monkeypatch,
-        "q426_facility_location_coreset",
-        training4,
-        "_Q426_DRIVER_CELL_BOUND",
-    )
-
-
-def test_q337_driver_path_equals_distributed(spark, monkeypatch):
-    from aws_datalake_platform_spark.plans import training2
-
-    _run_both(
-        spark,
-        monkeypatch,
-        "q337_zorder_skip_estimate",
-        training2,
-        "_Q337_DRIVER_ROW_BOUND",
-    )
-
-
-def test_q202_driver_path_equals_distributed(spark, monkeypatch):
-    from aws_datalake_platform_spark.operators import similarity
-
-    _run_both(
-        spark, monkeypatch, "q202_mmr_rerank", similarity, "_MMR_DRIVER_CAND_BOUND"
-    )
 
 
 def test_build_concurrently_preserves_thunk_order(spark):
