@@ -20,6 +20,7 @@ until stable.
 from __future__ import annotations
 
 import time
+import uuid
 from collections.abc import Callable
 from typing import Any
 
@@ -166,7 +167,9 @@ class MetricsCollector:
         """Execute ``action`` under a dedicated job group and record its
         wall time, status, and stage-level I/O metrics."""
         sc = self.spark.sparkContext
-        group = f"metrics::{name}::{len(self.records)}"
+        # unique per call: job groups live in the shared SparkContext, so a
+        # name + per-collector index would also count another collector's jobs
+        group = f"metrics::{name}::{uuid.uuid4().hex}"
         sc.setJobGroup(group, name)
         jobs_before = self._next_job_id()
         t0 = time.perf_counter()

@@ -10,18 +10,14 @@ partitioned snappy sink (:260-265).
 
 from __future__ import annotations
 
-import logging
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..catalog import RAW_IOT_SENSORS
 from ..functions.core import date_partition, pseudonymize, quality_score
-from ..sources.io import read_ndjson, write_curated_parquet
 from ..validation import DataValidator
-
-logger = logging.getLogger(__name__)
+from .job import run_transform
 
 
 def validate_iot(raw_df: DataFrame) -> dict[str, Any]:
@@ -61,46 +57,13 @@ def transform_iot_sensors(
     infer_schema: bool = False,
     metrics=None,
 ) -> dict[str, Any] | None:
-    """End-to-end IoT job (transform.py:193-270 semantics).
-
-    Reads with the catalog's RAW_IOT_SENSORS schema by default (inference
-    is a full extra pass at scale); infer_schema=True opts back into the
-    reference's infer-on-read (transform.py:203).
-
-    ``metrics`` (an observability.MetricsCollector) wraps the whole job:
-    the returned status dict gains a ``job_metrics`` entry with wall
-    time, stage I/O totals, and status — the engine-side analogue of the
-    reference's per-job CloudWatch metrics (monitoring/main.tf:45-164);
-    a raising job yields {"success": False, "job_metrics": {...}} with
-    status="failed" instead of propagating."""
-    if metrics is not None:
-        from ..observability import wrap_pipeline
-
-        return wrap_pipeline(
-            metrics,
-            "transform_iot_sensors",
-            lambda: transform_iot_sensors(
-                spark, raw_path, curated_path, raw_df,
-                halt_on_validation_failure, infer_schema, metrics=None,
-            ),
-        )
-    if raw_df is None:
-        try:
-            raw_df = read_ndjson(spark, raw_path, schema=None if infer_schema else RAW_IOT_SENSORS)
-        except Exception as e:
-            logger.error("Failed to read raw IoT sensor data: %s", e)
-            return None
-    if raw_df.isEmpty():
-        logger.warning("No raw IoT sensor data found")
-        return None
-
-    result = validate_iot(raw_df)
-    if not result["success"]:
-        logger.error("IoT sensor data validation FAILED: %s", result)
-        if halt_on_validation_failure:
-            raise ValueError(f"iot validation failed: {result}")
-
-    curated = curate_iot(raw_df)
-    if curated_path is not None:
-        write_curated_parquet(curated, curated_path, ["date"])
-    return result
+    """End-to-end IoT job (transform.py:193-270 semantics), run by
+    pipelines/job.py:run_transform, which documents the return value and
+    the ``metrics`` contract. Reads with the catalog's RAW_IOT_SENSORS
+    schema by default (inference is a full extra pass at scale);
+    infer_schema=True opts back into the reference's infer-on-read
+    (transform.py:203)."""
+    return run_transform(
+        spark, "transform_iot_sensors", "iot", RAW_IOT_SENSORS, validate_iot, curate_iot,
+        raw_path, curated_path, raw_df, halt_on_validation_failure, infer_schema, metrics,
+    )

@@ -13,17 +13,14 @@ scan (validation.DataValidator) instead of 13 count() jobs.
 
 from __future__ import annotations
 
-import logging
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import RAW_WEATHER
 from ..functions.core import date_partition, fahrenheit
-from ..sources.io import read_ndjson, write_curated_parquet
 from ..validation import DataValidator
-
-logger = logging.getLogger(__name__)
+from .job import run_transform
 
 
 def validate_weather(raw_df: DataFrame) -> dict[str, Any]:
@@ -57,45 +54,13 @@ def transform_weather(
     infer_schema: bool = False,
     metrics=None,
 ) -> dict[str, Any] | None:
-    """End-to-end weather job (transform.py:134-190 semantics):
-    read -> empty guard -> validate -> derive -> partitioned write.
-    Returns the validation summary (None when input is empty/missing).
-
-    Reads with the catalog's authoritative RAW_WEATHER schema by default
-    (catalog-as-source-of-truth, SURVEY §1.3): at 100 TB schema inference
-    is a full extra pass over the raw zone. infer_schema=True restores the
-    reference's infer-on-read behavior (transform.py:144).
-
-    ``metrics`` wraps the job in an observability.MetricsCollector run —
-    see pipelines/iot.py for the contract."""
-    if metrics is not None:
-        from ..observability import wrap_pipeline
-
-        return wrap_pipeline(
-            metrics,
-            "transform_weather",
-            lambda: transform_weather(
-                spark, raw_path, curated_path, raw_df,
-                halt_on_validation_failure, infer_schema, metrics=None,
-            ),
-        )
-    if raw_df is None:
-        try:
-            raw_df = read_ndjson(spark, raw_path, schema=None if infer_schema else RAW_WEATHER)
-        except Exception as e:  # missing path == missing raw data (ref :143-149)
-            logger.error("Failed to read raw weather data: %s", e)
-            return None
-    if raw_df.isEmpty():
-        logger.warning("No raw weather data found")
-        return None
-
-    result = validate_weather(raw_df)
-    if not result["success"]:
-        logger.error("Weather data validation FAILED: %s", result)
-        if halt_on_validation_failure:
-            raise ValueError(f"weather validation failed: {result}")
-
-    curated = curate_weather(raw_df)
-    if curated_path is not None:
-        write_curated_parquet(curated, curated_path, ["date"])
-    return result
+    """End-to-end weather job (transform.py:134-190 semantics), run by
+    pipelines/job.py:run_transform, which documents the return value and
+    the ``metrics`` contract. Reads with the catalog's authoritative
+    RAW_WEATHER schema by default (catalog-as-source-of-truth, SURVEY
+    §1.3); infer_schema=True restores the reference's infer-on-read
+    (transform.py:144)."""
+    return run_transform(
+        spark, "transform_weather", "weather", RAW_WEATHER, validate_weather, curate_weather,
+        raw_path, curated_path, raw_df, halt_on_validation_failure, infer_schema, metrics,
+    )

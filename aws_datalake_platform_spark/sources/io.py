@@ -27,9 +27,18 @@ _CORRUPT = "_corrupt_record"
 _RUN_SEQ = itertools.count()
 
 
-def _dead_letter_split(df: DataFrame, bad_records_path: str, clean_df: DataFrame) -> DataFrame:
-    """Shared corrupt-row routing for the PERMISSIVE + corrupt-column
-    readers (read_ndjson / read_csv).
+def _read_dead_lettered(
+    spark: SparkSession,
+    fmt: str,
+    path: str,
+    schema: T.StructType | None,
+    bad_records_path: str,
+    **options: str,
+) -> DataFrame:
+    """Dead-letter read shared by read_ndjson and read_csv: a PERMISSIVE
+    scan with a ``_corrupt_record`` column routes bad lines, and a
+    DROPMALFORMED re-read of the same files is returned. ``options`` are
+    the format's own reader options, applied to both scans.
 
     - Bad lines land under a per-run ``run=<millis>-<pid>-<seq>``
       subdirectory (partition-style name, so a plain read of the
@@ -60,7 +69,21 @@ def _dead_letter_split(df: DataFrame, bad_records_path: str, clean_df: DataFrame
       required set below the full schema). Regression:
       test_pipelines.py::test_dead_letter_count_equals_collect.
     """
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if schema is None:
+        raise ValueError("bad_records_path requires an explicit schema")
+    aug = T.StructType(list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())])
+    df = (
+        spark.read.options(**options).schema(aug)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", _CORRUPT)
+        .format(fmt).load(path)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    clean_df = (
+        spark.read.options(**options).schema(schema)
+        .option("mode", "DROPMALFORMED")
+        .format(fmt).load(path)
+    )
     try:
         run_dir = (
             f"{bad_records_path}/run={int(time.time() * 1000)}"
@@ -88,19 +111,9 @@ def read_ndjson(
     pattern: Databricks' ``badRecordsPath`` reader option is NOT
     implemented in open-source Spark (it is silently ignored), so relying
     on it would drop the dead-letter guarantee without any error. See
-    _dead_letter_split for the caching + per-run-directory contract."""
+    _read_dead_lettered for the caching + per-run-directory contract."""
     if bad_records_path is not None:
-        if schema is None:
-            raise ValueError("bad_records_path requires an explicit schema")
-        aug = T.StructType(list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())])
-        df = (
-            spark.read.schema(aug)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", _CORRUPT)
-            .json(path)
-        )
-        clean = spark.read.schema(schema).option("mode", "DROPMALFORMED").json(path)
-        return _dead_letter_split(df, bad_records_path, clean)
+        return _read_dead_lettered(spark, "json", path, schema, bad_records_path)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -141,25 +154,10 @@ def read_csv(
     badRecordsPath option is a silent no-op on OSS Spark). Without a
     schema, inference reads once to sample — acceptable only for ad-hoc
     exploration."""
-    reader = spark.read.option("header", str(header).lower()).option("sep", delimiter)
+    options = {"header": str(header).lower(), "sep": delimiter}
     if bad_records_path is not None:
-        if schema is None:
-            raise ValueError("bad_records_path requires an explicit schema")
-        aug = T.StructType(list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())])
-        df = (
-            reader.schema(aug)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", _CORRUPT)
-            .csv(path)
-        )
-        clean = (
-            spark.read.option("header", str(header).lower())
-            .option("sep", delimiter)
-            .schema(schema)
-            .option("mode", "DROPMALFORMED")
-            .csv(path)
-        )
-        return _dead_letter_split(df, bad_records_path, clean)
+        return _read_dead_lettered(spark, "csv", path, schema, bad_records_path, **options)
+    reader = spark.read.options(**options)
     if schema is not None:
         reader = reader.schema(schema)
     else:

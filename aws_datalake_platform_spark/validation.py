@@ -216,31 +216,3 @@ def require_unique_key(df: DataFrame, column: str, dataset: str) -> None:
             "to locate the offending rows."
         )
 
-
-def observed_metrics(df: DataFrame, name: str = "dq") -> tuple[DataFrame, "Observation"]:
-    """Piggyback data-quality counters on an EXISTING action via
-    ``DataFrame.observe`` — zero extra scans, unlike ``validate()``'s one
-    dedicated aggregate pass (already a 13x improvement over the
-    reference's per-expectation scans, transform.py:66-98).
-
-    Returns ``(df_with_observation, observation)``; after ANY action runs
-    on the returned frame (a write, a count), ``observation.get`` yields
-    ``{"n_rows", "n_null_keys", "n_negative_values"}`` collected as a
-    side effect of that same job. This is the production shape for a
-    100 TB pipeline: the quality counters ride the write job for free.
-
-    Numeric columns are detected by dtype; string keys by the first
-    string column — callers with specific contracts should pass their
-    own observe() expressions instead.
-    """
-    from pyspark.sql import Observation
-
-    str_cols = [c for c, t in df.dtypes if t == "string"]
-    num_cols = [c for c, t in df.dtypes if t in ("double", "float", "bigint", "int")]
-    key = str_cols[0] if str_cols else df.columns[0]
-    metrics = [F.count(F.lit(1)).alias("n_rows"),
-               _cnt(F.col(key).isNull()).alias("n_null_keys")]
-    if num_cols:
-        metrics.append(_cnt(F.col(num_cols[0]) < 0).alias("n_negative_values"))
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs

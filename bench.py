@@ -376,6 +376,17 @@ def materialize(df) -> int:
     return df.count()
 
 
+def timed_pass(spark, build, materialize=materialize) -> float:
+    """One timed pass, shared by every timing loop here and by
+    scripts/qtime.py: clearCache, drain(), then the wall seconds to run
+    ``build()`` and materialize the frame it returns."""
+    spark.catalog.clearCache()
+    drain(spark)
+    t0 = time.perf_counter()
+    materialize(build())
+    return time.perf_counter() - t0
+
+
 # warm at the TARGET sf: AQE picks different physical plans (broadcast vs
 # SMJ, coalesced partition counts) at different data sizes, so a tiny-sf
 # warmup leaves the target-size plan's generated classes cold (q10 measured
@@ -432,11 +443,7 @@ def main() -> None:
         spec = QUERY_REGISTRY.get(name)
         if spec is None:
             return
-        spark.catalog.clearCache()
-        drain(spark)
-        t0 = time.perf_counter()
-        materialize(spec.fn(spark, SF_DIR))
-        elapsed = time.perf_counter() - t0
+        elapsed = timed_pass(spark, lambda: spec.fn(spark, SF_DIR))
         passes.setdefault(name, []).append(round(elapsed, 3))
         timings[name] = round(min(elapsed, timings.get(name, elapsed)), 3)
 
@@ -485,12 +492,8 @@ def main() -> None:
             # than the fresh twins they're compared against)
             for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))):
                 for name, fn in FROM_INDEX_AUDITS.items():
-                    spark.catalog.clearCache()
-                    drain(spark)
-                    t0 = time.perf_counter()
-                    materialize(fn(spark, SF_DIR, index_dir))
                     key = f"{name}_from_index"
-                    elapsed = round(time.perf_counter() - t0, 3)
+                    elapsed = round(timed_pass(spark, lambda: fn(spark, SF_DIR, index_dir)), 3)
                     from_index[key] = min(elapsed, from_index.get(key, elapsed))
         finally:
             shutil.rmtree(index_dir, ignore_errors=True)

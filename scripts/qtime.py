@@ -2,9 +2,9 @@
 """Per-query timing/plan harness for optimization iteration (guide §1).
 
 Times individual registry queries with bench.py's exact discipline
-(its UDF-worker prime and drain(), clearCache before each pass, warmup
-pass excluded, min over N passes) in ONE session, and optionally writes
-``.explain("formatted")`` to a file so plan claims are auditable:
+(its UDF-worker prime and timed_pass(), warmup pass excluded, min over
+N passes) in ONE session, and optionally writes ``.explain("formatted")``
+to a file so plan claims are auditable:
 
     python scripts/qtime.py q368_hits_hubs_authorities q394_label_propagation \
         [--sf LAKE_DIR] [--passes 3] [--explain-dir plans/r11] \
@@ -19,7 +19,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -40,7 +39,7 @@ def main() -> int:
 
     from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY
     from aws_datalake_platform_spark.session import get_spark
-    from bench import drain, prime_udf_workers
+    from bench import prime_udf_workers, timed_pass
 
     spark = get_spark(app_name="qtime",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -73,12 +72,8 @@ def main() -> int:
         materialize(spec.fn(spark, args.sf))  # warmup (codegen/JIT)
         runs = []
         for i in range(args.passes):
-            spark.catalog.clearCache()
-            drain(spark)
             spark.sparkContext.setJobDescription(f"{name} pass {i}")
-            t0 = time.perf_counter()
-            materialize(spec.fn(spark, args.sf))
-            runs.append(round(time.perf_counter() - t0, 3))
+            runs.append(round(timed_pass(spark, lambda: spec.fn(spark, args.sf), materialize), 3))
         results[name] = {"min": min(runs), "runs": runs}
         print(f"{name:45s} min={min(runs):7.3f}  runs={runs}", flush=True)
 

@@ -34,6 +34,14 @@ def test_run_isolates_concurrent_actions(spark):
     assert rec["result"] == rec["input_records"]
 
 
+def test_run_isolates_collectors(spark):
+    """Collectors share the SparkContext: a record name another collector
+    already used must not pull that collector's jobs into the record."""
+    first = MetricsCollector(spark).run("count", lambda: spark.range(10).count())
+    second = MetricsCollector(spark).run("count", lambda: spark.range(10).count())
+    assert second["n_jobs"] == first["n_jobs"] >= 1
+
+
 def test_failed_action_surfaces_status_failed(spark):
     mc = MetricsCollector(spark)
 

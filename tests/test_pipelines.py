@@ -5,11 +5,17 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
-from aws_datalake_platform_spark.pipelines.iot import curate_iot, transform_iot_sensors
-from aws_datalake_platform_spark.pipelines.weather import curate_weather, transform_weather
-from aws_datalake_platform_spark.sources.io import read_ndjson, write_ndjson
+from aws_datalake_platform_spark.catalog import RAW_IOT_SENSORS, RAW_WEATHER
+from aws_datalake_platform_spark.pipelines.iot import curate_iot, transform_iot_sensors, validate_iot
+from aws_datalake_platform_spark.pipelines.weather import (
+    curate_weather,
+    transform_weather,
+    validate_weather,
+)
+from aws_datalake_platform_spark.sources.io import read_ndjson, write_curated_parquet, write_ndjson
 from aws_datalake_platform_spark.sources.synthetic import (
     iot_readings,
     open_meteo_like_response,
@@ -270,13 +276,66 @@ def test_daily_cron_schedule():
     assert runs == [1, 1]
 
 
-def test_empty_input_guard(spark):
-    """S5: empty input -> skip, return None (transform.py:145-147)."""
-    empty = spark.createDataFrame([], "sensor_id string, city string, timestamp string, "
-                                       "temperature_c double, humidity_pct double, aqi double, "
-                                       "battery_level double")
-    assert transform_iot_sensors(spark, raw_df=empty) is None
-    assert transform_weather(spark, raw_path="/nonexistent/path") is None
+_TRANSFORMS = pytest.mark.parametrize(
+    "transform, validate, curate, schema",
+    [
+        (transform_iot_sensors, validate_iot, curate_iot, RAW_IOT_SENSORS),
+        (transform_weather, validate_weather, curate_weather, RAW_WEATHER),
+    ],
+    ids=["iot", "weather"],
+)
+
+
+def _raw_zone(spark, path: str, transform) -> None:
+    """A small dated NDJSON raw zone for ``transform``'s dataset."""
+    if transform is transform_iot_sensors:
+        raw = iot_readings(spark, sensors_per_city=2, ticks=3, seed=1)
+    else:
+        city = {"name": "Tokyo", "latitude": 35.68, "longitude": 139.69}
+        raw = weather_raw_from_responses(
+            spark, [(city, open_meteo_like_response(city, "2026-01-05"))],
+            "ing-1", "2026-01-05T06:00:00+00:00",
+        )
+    write_ndjson(raw.withColumn("date", F.substring("timestamp", 1, 10)), path, ["date"])
+
+
+@_TRANSFORMS
+@pytest.mark.parametrize(
+    "source", ["empty_frame", "empty_dir", "empty_dir_inferred", "missing_path"]
+)
+def test_empty_input_guard(spark, tmp_path, transform, validate, curate, schema, source):
+    """S5: empty or missing input -> skip, return None, write nothing
+    (transform.py:145-147). An inferred read of an empty file has no
+    columns at all and is empty input too."""
+    raw, curated = tmp_path / "raw", tmp_path / "curated"
+    if source == "empty_frame":
+        kwargs = {"raw_df": spark.createDataFrame([], schema)}
+    else:
+        if source != "missing_path":
+            raw.mkdir()
+            (raw / "part-00000.json").touch()
+        kwargs = {"raw_path": str(raw), "infer_schema": source == "empty_dir_inferred"}
+    assert transform(spark, curated_path=str(curated), **kwargs) is None
+    assert not curated.exists()
+
+
+@_TRANSFORMS
+def test_empty_guard_costs_no_job(spark, tmp_path, transform, validate, curate, schema):
+    """The empty guard reads the row count the validation aggregate
+    already carries: a transform runs exactly the jobs of its validation
+    plus those of its curate + write, with no isEmpty() job of its own."""
+    from aws_datalake_platform_spark.observability import MetricsCollector
+
+    raw_path = str(tmp_path / "raw")
+    _raw_zone(spark, raw_path, transform)
+    mc = MetricsCollector(spark)
+    val = mc.run("validate", lambda: validate(read_ndjson(spark, raw_path, schema=schema)))
+    write = mc.run("curate+write", lambda: write_curated_parquet(
+        curate(read_ndjson(spark, raw_path, schema=schema)), str(tmp_path / "c1"), ["date"]))
+    result = transform(spark, raw_path, str(tmp_path / "c2"), metrics=mc)
+    assert result == {**val["result"], "job_metrics": result["job_metrics"]}
+    assert val["n_jobs"] >= 1 and write["n_jobs"] >= 1
+    assert result["job_metrics"]["n_jobs"] == val["n_jobs"] + write["n_jobs"]
 
 
 def test_validation_failure_nonblocking_and_halt(spark, tmp_path):

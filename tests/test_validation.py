@@ -89,19 +89,3 @@ def test_single_scan_fusion(spark):
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after - before <= 2  # createDataFrame may add one; agg adds one
 
-
-def test_observed_metrics_ride_existing_action(spark):
-    """observe() counters are collected by the SAME job as the action —
-    no extra scan (S5/F-family as zero-cost production counters)."""
-    from aws_datalake_platform_spark.validation import observed_metrics
-
-    df = spark.createDataFrame(
-        [("a", 1.0), (None, -2.0), ("c", 3.0), (None, 4.0)], "city string, v double"
-    )
-    observed, obs = observed_metrics(df, "dq_test")
-    n = observed.count()  # the one action; metrics piggyback on it
-    got = obs.get
-    assert n == 4
-    assert got["n_rows"] == 4
-    assert got["n_null_keys"] == 2
-    assert got["n_negative_values"] == 1
