@@ -21,6 +21,43 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERY_REGISTRY["q01_pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
+def _green_rounds() -> list[tuple[int, set[str]]]:
+    """(round, hash-green query names) for every readable
+    ``CORRECTNESS_r<N>.json`` next to this module, in file-name order.
+
+    Only hash-green rows count: a rows-only/no_oracle row (e.g. q32 in
+    r02, before it grew a SQL oracle) should rotate back to the front
+    once it becomes fully checkable. Unreadable or malformed files and
+    JSON that is not an object are skipped, so a bad file never breaks
+    ``queries()``.
+    """
+    import glob
+    import json
+    import os
+    import re
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds: list[tuple[int, set[str]]] = []
+    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        try:
+            with open(path) as fh:
+                rows = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        if not isinstance(rows, dict):
+            continue  # valid JSON but not the expected object shape
+        green = {
+            name
+            for name, row in rows.items()
+            if isinstance(row, dict) and row.get("hash_match") is True
+        }
+        rounds.append((int(m.group(1)), green))
+    return rounds
+
+
 def _driver_checked() -> set[str]:
     """Query names already hash-checked by the driver in past rounds.
 
@@ -30,29 +67,7 @@ def _driver_checked() -> set[str]:
     the recorded rounds and rotate unchecked queries to the front; every
     query reaches the gate after ceil(N/50) rounds.
     """
-    import glob
-    import json
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    checked: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue  # valid JSON but not the expected object shape
-        # Only hash-green rows count as checked — a rows-only/no_oracle row
-        # (e.g. q32 in r02, before it grew a SQL oracle) should rotate back
-        # to the front once it becomes fully checkable.
-        checked |= {
-            name
-            for name, row in rows.items()
-            if isinstance(row, dict) and row.get("hash_match") is True
-        }
-    return checked
+    return set().union(*(green for _, green in _green_rounds()))
 
 
 # Queries whose plan or oracle changed after round V (the value): a green
@@ -62,7 +77,11 @@ def _driver_checked() -> set[str]:
 # than let history pile up.
 # Value 11: the bounded driver-path sites moved onto one byte budget
 # (functions.core.fits_on_driver), and q368/q394 lost their broadcast
-# tiers; the q68-family entries reach connected_components.
+# tiers; the q68-family entries reach connected_components. The
+# banded-LSH detectors then moved onto one candidate -> verify helper
+# (operators.dedup._verified_pairs) and lsh_ann_topk onto the shared
+# hyperplane-code UDF: every query whose build reaches
+# capped_candidate_pairs or lsh_ann_topk is listed.
 _CHANGED_AFTER_ROUND = {
     "q337_zorder_skip_estimate": 11,
     "q368_hits_hubs_authorities": 11,
@@ -76,6 +95,20 @@ _CHANGED_AFTER_ROUND = {
     "q349_cluster_agreement": 11,
     "q417_split_leakage_audit": 11,
     "q425_dedup_token_budget": 11,
+    "q24_minhash_lsh_dedup": 11,
+    "q25_simhash_dedup": 11,
+    "q32_ann_lsh_topk": 11,
+    "q59_embedding_near_dup_lsh": 11,
+    "q225_lsh_dedup_audit": 11,
+    "q277_detector_agreement": 11,
+    "q315_minhash_budget_plan": 11,
+    "q354_dup_capture_recapture": 11,
+    "q367_cochran_q": 11,
+    "q387_fellegi_sunter_weights": 11,
+    "q404_fs_linkage_scoring": 11,
+    "q411_similarity_margin": 11,
+    "q412_dedup_transitivity": 11,
+    "q423_pair_edit_distance_audit": 11,
 }
 
 
@@ -88,30 +121,12 @@ def _reverify() -> list[str]:
     never-sampled queries — waits exactly one round and fronts in the
     V+1 gate, instead of silently displacing V's planned slice.
     """
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
     green_rounds: dict[str, int] = {}
     latest_recorded = 0
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue  # e.g. a JSON array: items() would AttributeError
+    for rnd, green in _green_rounds():
         latest_recorded = max(latest_recorded, rnd)
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("hash_match") is True:
-                green_rounds[name] = max(green_rounds.get(name, 0), rnd)
+        for name in green:
+            green_rounds[name] = max(green_rounds.get(name, 0), rnd)
     return [
         n
         for n, changed_rnd in _CHANGED_AFTER_ROUND.items()

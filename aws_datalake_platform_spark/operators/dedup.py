@@ -24,6 +24,7 @@ Scale design (the part that matters at 100 TB):
 """
 
 import hashlib
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -307,30 +308,20 @@ def minhash_band_buckets(
     return base.select("__id", F.posexplode("__bks").alias("__band", "__bucket"))
 
 
-def capped_candidate_pairs(
-    buckets: DataFrame, max_bucket_size: int, join_threshold: int | None = None
-) -> DataFrame:
+def capped_candidate_pairs(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
     """Distinct candidate (doc_a, doc_b) pairs from (__id, __band, __bucket)
     membership, with a hot-bucket guard.
 
-    Three expansion regimes by bucket size (pair SETS identical; only the
-    physical strategy differs, so the oracle contract is unaffected):
+    Two expansion regimes by bucket size:
 
-    - tiny (cnt <= join_threshold, default = the cap, i.e. this regime):
-      collect_list + HOF-slice expansion. The groupBy reuses the stats
-      window's (band, bucket) partitioning — NO extra shuffle — and the
-      agg buffer is bounded by the cap. Controlled same-session A/B at
-      sf0.1 (3 interleaved passes each): expand 2.44 s vs equi-join
-      3.06 s for q24 MinHash AND expand 2.49 s vs join 2.91 s for q25
-      SimHash — the r3 interim claim that the join beat HOF expansion
-      did not reproduce once the strategies were compared under
-      identical host load; expand wins at any cap <= ~512.
-    - mid (join_threshold < cnt <= max_bucket_size; EMPTY by default):
-      (band, bucket) equi-self-join — sort-merge streams the left side
-      and buffers at most max_bucket_size right rows per key. Kept as
-      an opt-in for mid-heavy bucket distributions with a cap large
-      enough that per-bucket arrays strain the collect_list buffer.
-    - big (cnt > max_bucket_size): STAR pairs (bucket-min id, member) —
+    - cnt <= max_bucket_size: collect_list + HOF-slice expansion into
+      every pair of the bucket. The groupBy reuses the stats window's
+      (band, bucket) partitioning — NO extra shuffle — and the agg
+      buffer is bounded by the cap. Controlled same-session A/B at sf0.1
+      (3 interleaved passes each): expand 2.44 s vs a (band, bucket)
+      equi-self-join 3.06 s for q24 MinHash AND expand 2.49 s vs join
+      2.91 s for q25 SimHash; expand wins at any cap <= ~512.
+    - cnt > max_bucket_size: STAR pairs (bucket-min id, member) —
       linear in the bucket size; the bucket stays ONE connected
       component for GROUP RESOLUTION (connected_components), so the
       duplicate group is still fully reported there. Precision caveat
@@ -346,16 +337,6 @@ def capped_candidate_pairs(
       external sorter and no agg buffer exceeds the cap. Callers
       quantify drops with bucket_stats().
     """
-    if join_threshold is None:
-        join_threshold = max_bucket_size
-    if join_threshold > max_bucket_size:
-        # a threshold above the cap would collect_list-expand buckets the
-        # cap exists to bound (quadratic pairs, unbounded agg buffer) AND
-        # double-emit star pairs for the overlap regime
-        raise ValueError(
-            f"join_threshold ({join_threshold}) must be <= max_bucket_size "
-            f"({max_bucket_size})"
-        )
     w = Window.partitionBy("__band", "__bucket")
     members = buckets.withColumn("__cnt", F.count(F.lit(1)).over(w)).withColumn(
         "__mn", F.min("__id").over(w)
@@ -370,8 +351,8 @@ def capped_candidate_pairs(
             ),
         )
     )
-    tiny = (
-        members.filter(F.col("__cnt") <= join_threshold)
+    small = (
+        members.filter(F.col("__cnt") <= max_bucket_size)
         .groupBy("__band", "__bucket")
         .agg(ids.alias("__ids"))
         .filter(F.size("__ids") > 1)
@@ -380,28 +361,40 @@ def capped_candidate_pairs(
         # r3 advisor: callers may feed duplicate (__id, __band, __bucket)
         # rows (public API — internal producers happen to be dup-free);
         # sorted duplicate ids would then expand to doc_a == doc_b
-        # self-pairs that survive distinct(). The old join path's a < b
-        # guard, restored as a codegen'd filter.
+        # self-pairs that survive distinct(); a codegen'd a < b filter
+        # drops them.
         .filter(F.col("doc_a") < F.col("doc_b"))
     )
     big = members.filter(
         (F.col("__cnt") > max_bucket_size) & (F.col("__id") != F.col("__mn"))
     ).select(F.col("__mn").alias("doc_a"), F.col("__id").alias("doc_b"))
-    if join_threshold >= max_bucket_size:
-        # mid regime empty by construction: don't plan a join branch that
-        # would re-evaluate the window subtree just to produce zero rows
-        return tiny.union(big).distinct()
-    mid_m = members.filter(
-        (F.col("__cnt") > join_threshold) & (F.col("__cnt") <= max_bucket_size)
+    return small.union(big).distinct()
+
+
+def _verified_pairs(
+    buckets: DataFrame,
+    payload: DataFrame,
+    score: Callable[[Column, Column], Column],
+    max_bucket_size: int,
+) -> DataFrame:
+    """(doc_a, doc_b, __score): the filter-and-verify tail every banded-LSH
+    detector shares. Capped candidates from ``buckets`` (__id, __band,
+    __bucket) each join both sides' payload from ``payload`` (__id, __p)
+    on doc id, and ``score(a, b)`` scores the two payloads. Callers keep
+    their own threshold, rounding and output names.
+
+    Joins against the payload are plain equi-joins on doc id — AQE
+    broadcasts the candidate side when it is small and falls back to
+    shuffle joins when a boilerplate-heavy corpus makes it large.
+    """
+    a = payload.select(F.col("__id").alias("doc_a"), F.col("__p").alias("__pa"))
+    b = payload.select(F.col("__id").alias("doc_b"), F.col("__p").alias("__pb"))
+    return (
+        capped_candidate_pairs(buckets, max_bucket_size)
+        .join(a, "doc_a")
+        .join(b, "doc_b")
+        .select("doc_a", "doc_b", score(F.col("__pa"), F.col("__pb")).alias("__score"))
     )
-    left = mid_m.select(F.col("__id").alias("doc_a"), "__band", "__bucket")
-    right = mid_m.select(F.col("__id").alias("doc_b"), "__band", "__bucket")
-    mid = (
-        left.join(right, ["__band", "__bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    return tiny.union(mid).union(big).distinct()
 
 
 def bucket_stats(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
@@ -452,10 +445,9 @@ def minhash_lsh_pairs(
     Earlier shape (signature pass + separate word_shingles verify pass
     behind a candidate semi-join) cost a second corpus scan, a second
     pandas-UDF stage, and a semi-join exchange on the critical path;
-    sharing the hash sets removes all three. Joins against the verify
-    sides are plain equi-joins on doc id — AQE broadcasts the candidate
-    side when it is small and falls back to shuffle joins when a
-    boilerplate-heavy corpus makes it large.
+    sharing the hash sets removes all three. Candidates, both verify
+    sides and the score go through _verified_pairs, the tail SimHash and
+    embedding LSH share.
 
     The persisted base relation is scoped to this plan; Spark evicts it
     LRU (or call spark.catalog.clearCache() between unrelated workloads).
@@ -470,23 +462,14 @@ def minhash_lsh_pairs(
     # populates the cache once; every branch then reads it.
     base.count()
     buckets = base.select("__id", F.posexplode("__bks").alias("__band", "__bucket"))
-    candidates = capped_candidate_pairs(buckets, max_bucket_size)
-
-    a = base.select(F.col("__id").alias("doc_a"), F.col("__mh").alias("__ma"))
-    b = base.select(F.col("__id").alias("doc_b"), F.col("__mh").alias("__mb"))
-    return (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("__ma", "__mb"))
-                / F.size(F.array_union("__ma", "__mb"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
+    pairs = _verified_pairs(
+        buckets,
+        base.select("__id", F.col("__mh").alias("__p")),
+        lambda a, b: F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)),
+        max_bucket_size,
+    )
+    return pairs.filter(F.col("__score") >= threshold).select(
+        "doc_a", "doc_b", F.round("__score", 4).alias("jaccard")
     )
 
 
@@ -591,15 +574,14 @@ def simhash_near_dup_pairs(
             )
         ).alias("__band", "__bucket"),
     )
-    candidates = capped_candidate_pairs(buckets, max_bucket_size)
-    a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("__sa"))
-    b = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("__sb"))
-    return (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("hamming", F.bit_count(F.expr("__sa ^ __sb")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+    pairs = _verified_pairs(
+        buckets,
+        sig.select(F.col("doc_id").alias("__id"), F.col("simhash").alias("__p")),
+        lambda a, b: F.bit_count(a.bitwiseXOR(b)),
+        max_bucket_size,
+    )
+    return pairs.filter(F.col("__score") <= max_hamming).select(
+        "doc_a", "doc_b", F.col("__score").alias("hamming")
     )
 
 
@@ -778,6 +760,17 @@ def connected_components(
             break
     sym.unpersist()
     return labels.select("node", "comp")
+
+
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) per document in some (doc_a,
+    doc_b) near-dup pair: connected_components' min-id label as the
+    cluster id, and the cluster's member count. Documents in no pair
+    (singletons) are absent."""
+    comp = connected_components(pairs, "doc_a", "doc_b")
+    return comp.select(
+        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
+    ).withColumn("cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster_id")))
 
 
 # ── Incremental dedup against a stored corpus index ──────────────────────────

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .dedup import capped_candidate_pairs
+from .dedup import _verified_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -126,28 +126,26 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return planes
 
 
-def lsh_bucket_ids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Sign-bit bucket id per vector (random-hyperplane LSH). Vectorized:
-    one numpy matmul per Arrow batch."""
-    planes = _hyperplanes(n_planes, dim, seed)
+def _hyperplane_codes(
+    vec: Column, bands: int, planes_per_band: int, seed: int, dim: int
+) -> Column:
+    """array<int> of ``bands`` sign-random-projection codes per vector: the
+    signs against bands*planes_per_band md5-derived hyperplanes, packed
+    planes_per_band bits per band (plane j of a band is bit j). One numpy
+    matmul per Arrow batch, map-side only."""
+    planes = _hyperplanes(bands * planes_per_band, dim, seed)
+    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
 
-    @pandas_udf(T.IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
+    @pandas_udf(T.ArrayType(T.IntegerType()))
+    def codes(vecs: pd.Series) -> pd.Series:
+        m = np.stack(vecs.to_numpy()).astype(np.float64)
         if m.shape[1] != dim:  # a mismatched corpus would silently mis-project
             raise ValueError(f"embedding dim {m.shape[1]} != configured dim {dim}")
-        signs = (m.astype(np.float64) @ planes.T) > 0  # (batch, planes)
-        return pd.Series(signs.astype(np.int64) @ (1 << np.arange(n_planes)))
+        signs = (m @ planes.T) > 0  # (batch, bands*r)
+        packed = signs.reshape(len(m), bands, planes_per_band).astype(np.int64) @ weights
+        return pd.Series(list(packed.astype(np.int32)))
 
-    return df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"),
-                     bucket(F.col(vec_col)).alias("bucket"))
+    return codes(vec)
 
 
 def banded_lsh_buckets(
@@ -167,22 +165,11 @@ def banded_lsh_buckets(
     (deterministic on any worker); bucketing is one numpy matmul per Arrow
     batch, map-side only. Output feeds capped_candidate_pairs.
     """
-    n_planes = bands * planes_per_band
-    planes = _hyperplanes(n_planes, dim, seed)
-    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def band_buckets(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        if m.shape[1] != dim:
-            raise ValueError(f"embedding dim {m.shape[1]} != configured dim {dim}")
-        signs = (m @ planes.T) > 0  # (batch, bands*r)
-        packed = signs.reshape(len(m), bands, planes_per_band).astype(np.int64) @ weights
-        return pd.Series(list(packed.astype(np.int32)))
-
     return df.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(band_buckets(F.col(vec_col))).alias("__band", "__bucket"),
+        F.posexplode(
+            _hyperplane_codes(F.col(vec_col), bands, planes_per_band, seed, dim)
+        ).alias("__band", "__bucket"),
     )
 
 
@@ -285,27 +272,24 @@ def embedding_near_dup_pairs_lsh(
     bk = banded_lsh_buckets(df, id_col, vec_col, bands, planes_per_band, seed, dim).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    candidates = capped_candidate_pairs(bk, max_bucket_size).select(
-        F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b")
-    )
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    base = df.repartition(n_parts).select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    )
-    a = base.select(F.col("__id").alias("vec_a"), F.col("__v").alias("__va"))
-    b = base.select(F.col("__id").alias("vec_b"), F.col("__v").alias("__vb"))
     # verify with the Arrow-batched sequential-fold cosine (bit-identical
     # to the interpreted HOF form — see pair_cosine_arrow; on candidate-
-    # dense corpora like the q59 fixture this was the whole query's cost)
-    return (
-        candidates.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(pair_cosine_arrow(F.col("__va"), F.col("__vb")), 6).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
+    # dense corpora like the q59 fixture this was the whole query's cost).
+    # Only the codes are cached; the verify sides read the vectors from
+    # the input. Caching the vectors with the codes made q411 slower at
+    # sf0.1 in an A/B run against this shape.
+    vectors = df.repartition(n_parts).select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__p")
+    )
+    pairs = _verified_pairs(
+        bk,
+        vectors,
+        lambda a, b: F.round(pair_cosine_arrow(a, b), 6),
+        max_bucket_size,
+    )
+    return pairs.filter(F.col("__score") >= threshold).select(
+        F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"), F.col("__score").alias("sim")
     )
 
 
@@ -660,18 +644,18 @@ def lsh_ann_topk(
     n_planes ~ log2(corpus / desired_bucket_size) as the corpus grows
     (see lsh_band_params) — a fixed plane count leaves per-query probe
     cost growing linearly with the corpus."""
-    qb = lsh_bucket_ids(queries, id_col, vec_col, n_planes, seed, dim).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qv"),
-        norm(F.col("embedding")).alias("__qn"),
-        "bucket",
-    )
-    cb = lsh_bucket_ids(corpus, id_col, vec_col, n_planes, seed, dim).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__cv"),
-        norm(F.col("embedding")).alias("__cn"),
-        "bucket",
-    )
+
+    def side(df: DataFrame, id_alias: str, v_alias: str, n_alias: str) -> DataFrame:
+        v = F.col(vec_col)
+        return df.select(
+            F.col(id_col).alias(id_alias),
+            v.alias(v_alias),
+            norm(v).alias(n_alias),
+            _hyperplane_codes(v, 1, n_planes, seed, dim)[0].alias("bucket"),
+        )
+
+    qb = side(queries, "query_id", "__qv", "__qn")
+    cb = side(corpus, "neighbor_id", "__cv", "__cn")
     sims = (
         qb.join(cb, "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))

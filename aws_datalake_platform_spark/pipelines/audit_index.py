@@ -30,7 +30,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.snapshots import read_snapshot, write_snapshot
 
@@ -56,7 +55,7 @@ def materialize_dedup_index(
     new version per table (overwrite-mode snapshot: latest wins, old
     versions stay time-travelable / rollback-able).
     """
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import dup_clusters
     from ..plans.queries import QUERY_REGISTRY
 
     report: dict[str, dict[str, int]] = {}
@@ -70,15 +69,8 @@ def materialize_dedup_index(
     # clusters derive from the STORED pair relation: the LSH pass above
     # ran once; connected components is per-round equi-join + min-agg
     # over the (tiny) pair relation only.
-    from pyspark.sql import Window
-
     pairs = read_snapshot(spark, _table_path(index_dir, "minhash_pairs"))
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    clusters = comp.select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
-    ).withColumn(
-        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
-    )
+    clusters = dup_clusters(pairs)
     path = _table_path(index_dir, "dup_clusters")
     version = write_snapshot(clusters, path)
     report["dup_clusters"] = {

@@ -714,20 +714,9 @@ _Q24_PAIRS_SQL = _REGISTRY["q24_minhash_lsh_dedup"].sql
     "transitive closure. Keep min-id per cluster to dedup.",
 )
 def q68_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    from ..operators.dedup import dup_clusters
 
-    from ..operators.dedup import connected_components
-
-    pairs = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        k=3, num_hashes=32, bands=8, threshold=0.5,
-    )
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    w = Window.partitionBy("cluster_id")
-    return comp.select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
-    ).withColumn("cluster_size", F.count(F.lit(1)).over(w))
+    return dup_clusters(_REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir))
 
 
 @register(

@@ -1061,12 +1061,11 @@ def q214_dup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the singleton count is one anti-join. No new scale surface.
     The from-index twin (pipelines/audit_index.py) re-aggregates the
     MATERIALIZED cluster relation instead of recomputing the LSH."""
-    from ..operators.dedup import connected_components, minhash_lsh_pairs
+    from ..operators.dedup import connected_components
+    from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, num_hashes=32, bands=8, threshold=0.5
-    )
+    pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir)
     comp = connected_components(pairs, "doc_a", "doc_b")
     clusters = comp.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")

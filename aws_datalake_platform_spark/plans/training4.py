@@ -625,16 +625,15 @@ def q417_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines/audit_index.py) and this query drops to a sub-second
     re-aggregation; the fresh-compute registry entry IS the
     full-recompute twin (q214/q277 precedent)."""
-    from ..operators.dedup import connected_components, minhash_lsh_pairs
+    from ..operators.dedup import connected_components
+    from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
     # materialize the pair relation ONCE: it feeds both the CC loop and
     # the flags join, and persist() is not honored under the
     # nondeterministic Arrow-UDF lineage (the q191 localCheckpoint
     # lesson, SURVEY round-7 #4)
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, num_hashes=32, bands=8, threshold=0.5
-    ).localCheckpoint(eager=True)
+    pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir).localCheckpoint(eager=True)
     comp = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
@@ -1645,12 +1644,10 @@ def q423_pair_edit_distance_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     the small pair side); levenshtein is per-pair JVM work bounded by
     detector recall, and the histogram is 10 rows. The O(len^2) DP per
     pair is the audit's price — run it on the PAIRS, never the corpus."""
-    from ..operators.dedup import minhash_lsh_pairs
+    from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, num_hashes=32, bands=8, threshold=0.5
-    ).select("doc_a", "doc_b")
+    pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir).select("doc_a", "doc_b")
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("ta"))
     db = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("tb"))
     nb = _Q423_BUCKETS
@@ -1903,12 +1900,11 @@ def q425_dedup_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one map-side pass; the rollup is a per-source aggregate. In a
     deployment the cluster relation reads from the materialized audit
     index and this drops to a re-aggregation (the q214 pattern)."""
-    from ..operators.dedup import connected_components, minhash_lsh_pairs
+    from ..operators.dedup import connected_components
+    from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, num_hashes=32, bands=8, threshold=0.5
-    )
+    pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir)
     comp = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"),
         F.when(F.col("node") == F.col("comp"), 1).otherwise(0).alias("keep"),

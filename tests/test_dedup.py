@@ -210,6 +210,31 @@ def test_capped_pairs_no_self_pairs_on_duplicate_membership(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(1, 2), (1, 3), (2, 3)}
 
 
+def test_capped_pairs_cap_boundary(spark):
+    """A bucket of exactly max_bucket_size members expands to all C(n, 2)
+    pairs; one member more degrades it to the n - 1 star pairs anchored
+    at the bucket minimum. Pairs that two buckets both produce (a second
+    band repeating them) come out once."""
+    from itertools import combinations
+
+    from aws_datalake_platform_spark.operators.dedup import capped_candidate_pairs
+
+    cap = 4
+    at_cap = [10, 11, 12, 13]
+    over_cap = [20, 21, 22, 23, 24]
+    rows = [(i, 0, 1) for i in at_cap] + [(i, 0, 2) for i in over_cap]
+    # band 1 repeats a pair of the at-cap bucket and the whole over-cap one
+    rows += [(10, 1, 1), (11, 1, 1)] + [(i, 1, 2) for i in over_cap]
+    buckets = spark.createDataFrame(rows, ["__id", "__band", "__bucket"])
+    pairs = [
+        (r["doc_a"], r["doc_b"])
+        for r in capped_candidate_pairs(buckets, max_bucket_size=cap).collect()
+    ]
+    assert len(pairs) == len(set(pairs)), pairs
+    assert set(pairs) == set(combinations(at_cap, 2)) | {(20, b) for b in over_cap[1:]}
+    assert len(pairs) == 6 + 4
+
+
 def test_incremental_dedup_verdicts_planted(spark):
     """Hand-planted batch vs corpus: an exact re-ingest -> exact_dup with
     dup_of = the corpus id; a one-token edit of a long doc -> near_dup;
