@@ -81,7 +81,11 @@ def _driver_checked() -> set[str]:
 # banded-LSH detectors then moved onto one candidate -> verify helper
 # (operators.dedup._verified_pairs) and lsh_ann_topk onto the shared
 # hyperplane-code UDF: every query whose build reaches
-# capped_candidate_pairs or lsh_ann_topk is listed.
+# capped_candidate_pairs or lsh_ann_topk is listed. The vector-search
+# operators then moved onto one exact-cosine scorer, one driver sample and
+# one row normalization, and q214/q417/q425 onto dedup.dup_clusters: every
+# query whose build reaches a changed operators.similarity function or one
+# of those three is listed.
 _CHANGED_AFTER_ROUND = {
     "q337_zorder_skip_estimate": 11,
     "q368_hits_hubs_authorities": 11,
@@ -109,6 +113,16 @@ _CHANGED_AFTER_ROUND = {
     "q411_similarity_margin": 11,
     "q412_dedup_transitivity": 11,
     "q423_pair_edit_distance_audit": 11,
+    "q30_ann_bruteforce_topk": 11,
+    "q31_embedding_near_dup": 11,
+    "q47_ann_ivf_topk": 11,
+    "q115_ann_pq_topk": 11,
+    "q203_kmeans_clusters": 11,
+    "q207_pca_top_component": 11,
+    "q209_ann_recall_audit": 11,
+    "q238_ivf_nprobe_plan": 11,
+    "q273_knn_outlier_scores": 11,
+    "q278_cluster_share_drift": 11,
 }
 
 

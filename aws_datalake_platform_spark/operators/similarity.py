@@ -3,6 +3,11 @@
 - cosine():            sequential-double column expression (zip_with +
                        aggregate) — bit-identical to a left-to-right SQL
                        evaluation, which is what makes it oracle-checkable
+- top-k search:        brute_force_topk / ivf_topk / lsh_ann_topk / pq_topk
+                       differ only in their candidate step (cross join,
+                       cluster join, bucket join, ADC shortlist); one exact
+                       scorer (_vec_side + _exact_topk) scores the rounded
+                       cosine and ranks (sim desc, neighbor_id asc)
 - brute_force_topk():  exact k-NN via broadcast query set x corpus scan —
                        the correctness baseline
 - embedding_near_dup_pairs(): all-pairs cosine threshold join
@@ -50,6 +55,56 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _vec_side(
+    df: DataFrame, id_col: str, vec_col: str, id_alias: str, tag: str, *extra: Column | str
+) -> DataFrame:
+    """One side of an exact-cosine join: (id_alias, __v<tag>, __n<tag>,
+    *extra). The norm is computed ONCE per row here, BEFORE the join —
+    inside the join each pair then costs one dot product, not dot + two
+    norms (the naive cosine re-derives norm(q) per corpus row: Q x N x dim
+    extra interpreted HOF work, measured 10+ s single-task at sf0.1)."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias(id_alias), v.alias(f"__v{tag}"), norm(v).alias(f"__n{tag}"), *extra
+    )
+
+
+def _pair_cosine(a: str, b: str) -> Column:
+    """round(dot / (norm_a * norm_b), 6) between the _vec_side columns
+    tagged ``a`` and ``b``. Dot and each norm are sequential left-to-right
+    doubles, so the value is bit-identical to the oracles' SQL fold."""
+    return F.round(
+        dot(F.col(f"__v{a}"), F.col(f"__v{b}")) / (F.col(f"__n{a}") * F.col(f"__n{b}")), 6
+    )
+
+
+def _exact_topk(cands: DataFrame, k: int, distinct_pairs: bool = False) -> DataFrame:
+    """The exact scorer behind every top-k search: joined candidates
+    (query_id, __vq, __nq, neighbor_id, __vc, __nc) -> (query_id,
+    neighbor_id, sim, rank) for the k best per query. Self-pairs are
+    dropped, sim is _pair_cosine, and rank orders (sim desc, neighbor_id
+    asc) so ties break the same way on every engine and partitioning.
+    ``distinct_pairs`` drops pairs a query reached by more than one
+    candidate route (IVF multi-probe) before ranking."""
+    sims = cands.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _pair_cosine("q", "c").alias("sim")
+    )
+    if distinct_pairs:
+        sims = sims.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _empty_topk(queries: DataFrame, id_col: str) -> DataFrame:
+    """Schema-stable empty top-k result, for a corpus with no rows."""
+    return queries.limit(0).select(
+        F.col(id_col).alias("query_id"),
+        F.col(id_col).alias("neighbor_id"),
+        F.lit(0.0).alias("sim"),
+        F.lit(1).alias("rank"),
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -59,37 +114,17 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query vector.
 
-    Rank on round(sim, 6) with the neighbor id as tiebreak so ordering is
-    stable across engines and partitionings. Queries are broadcast; the
-    corpus is scanned once with no shuffle before the per-query window.
-
-    Norms are computed ONCE per row on each side BEFORE the cross join —
-    inside the join each pair costs one dot product, not dot + two norms
-    (the naive cosine re-derives norm(q) per corpus row: Q x N x dim extra
-    interpreted HOF work, measured 10+ s single-task at sf0.1). The
-    repartition spreads the per-pair HOF work across cores when the corpus
-    arrives as one split; sim values are bit-identical because dot and each
-    norm stay sequential left-to-right doubles.
+    Candidates are every corpus row: queries are broadcast and the corpus
+    is scanned once with no shuffle before the per-query window
+    (_exact_topk scores and ranks). The repartition spreads the per-pair
+    HOF work across cores when the corpus arrives as one split; sim
+    values are bit-identical because dot and each norm stay sequential
+    left-to-right doubles.
     """
     n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), norm(F.col(vec_col)).alias("__qn")
-    )
-    c = corpus.repartition(n_parts).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), norm(F.col(vec_col)).alias("__cn")
-    )
-    sims = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = _vec_side(queries, id_col, vec_col, "query_id", "q")
+    c = _vec_side(corpus.repartition(n_parts), id_col, vec_col, "neighbor_id", "c")
+    return _exact_topk(F.broadcast(q).crossJoin(c), k)
 
 
 def embedding_near_dup_pairs(
@@ -99,18 +134,14 @@ def embedding_near_dup_pairs(
     CORRECTNESS BASELINE ONLY, never the scale path: the non-equi
     vec_a < vec_b join plans as a broadcast nested loop. Use
     embedding_near_dup_pairs_lsh for real corpora. Norms precomputed per
-    side (see brute_force_topk)."""
+    side (_vec_side)."""
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     base = df.repartition(n_parts)
-    a = base.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("__va"), norm(F.col(vec_col)).alias("__na"))
-    b = base.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("__vb"), norm(F.col(vec_col)).alias("__nb"))
+    a = _vec_side(base, id_col, vec_col, "vec_a", "a")
+    b = _vec_side(base, id_col, vec_col, "vec_b", "b")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6).alias("sim"),
-        )
+        .select("vec_a", "vec_b", _pair_cosine("a", "b").alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -316,6 +347,12 @@ def _seq_norms(x: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows of ``x`` L2-normalized by their _seq_norms (floored at 1e-12
+    so a zero row stays zero instead of NaN) — oracle-replayable."""
+    return x / np.maximum(_seq_norms(x)[:, None], 1e-12)
+
+
 def pair_cosine_arrow(a_col: Column, b_col: Column) -> Column:
     """Unrounded cosine ``dot(a,b) / (norm(a)*norm(b))`` for PAIR
     verification, computed Arrow-batched with the strict dim-order left
@@ -392,6 +429,27 @@ def _seq_sqdist(x: np.ndarray, c: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _driver_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, n: int, seed: int
+) -> np.ndarray:
+    """(<= n, dim) float64 matrix of a deterministic driver-side sample.
+
+    Selection is order-FREE: rows are ranked by md5(seed || id), then id,
+    so any worker layout or partitioning yields the same rows in the same
+    order (a TakeOrdered top-n — one corpus scan, no shuffle). The q47,
+    q115 and q207 oracles replay this ranking in SQL. An empty corpus
+    gives a (0, 0) matrix."""
+    ranked = corpus.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        F.md5(F.concat(F.lit(str(seed)), F.col(id_col).cast("string"))).alias("h"),
+    )
+    rows = ranked.orderBy("h", "id").limit(n).collect()
+    if not rows:
+        return np.zeros((0, 0))
+    return np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
+
+
 def _centroid_matrix(
     corpus: DataFrame,
     id_col: str,
@@ -404,9 +462,7 @@ def _centroid_matrix(
     """Deterministic spherical k-means coarse quantizer on a hash-ordered
     sample.
 
-    Sample selection is order-FREE: rows are ranked by md5(seed || id), so
-    any worker layout or partitioning yields the same sample (a
-    TakeOrdered top-k — one scan, no shuffle of the corpus). Lloyd
+    The sample is _driver_sample's (order-free md5 rank). Lloyd
     iterations run in numpy on the driver over at most sample_size x dim
     doubles; init is deterministic farthest-point (max-min): seed 0 is
     the first sample vector in hash order, each next seed maximizes its
@@ -421,21 +477,15 @@ def _centroid_matrix(
     UDF's closure. Real clustered data gets real centroids (the previous
     lowest-id heuristic degraded to whatever the first ids happened to
     be)."""
-    ranked = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.md5(F.concat(F.lit(str(seed)), F.col(id_col).cast("string"))).alias("h"),
-    )
-    rows = ranked.orderBy("h", "id").limit(max(sample_size, n_centroids)).collect()
-    if not rows:  # empty corpus -> no centroids; callers emit an empty result
-        return np.zeros((0, 0))
-    x = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
+    x = _driver_sample(corpus, id_col, vec_col, max(sample_size, n_centroids), seed)
+    if not len(x):  # empty corpus -> no centroids; callers emit an empty result
+        return x
     # every accumulation below is a sequential dim-/member-order fold
     # (never BLAS/pairwise): that is what lets the q47 oracle replay the
     # whole quantizer in SQL bit-for-bit, and it also makes centroids
     # identical across BLAS builds. Cost is unchanged at this size
     # (<= sample_size x dim doubles on the driver).
-    x = x / np.maximum(_seq_norms(x)[:, None], 1e-12)
+    x = _unit_rows(x)
 
     seed_idx = [0]
     min_sim = _seq_dots(x, x[0:1])[:, 0]  # cosine to nearest chosen seed
@@ -458,7 +508,7 @@ def _centroid_matrix(
                 for m in members:
                     acc = acc + m
                 cents[ci] = acc / len(members)
-        cents = cents / np.maximum(_seq_norms(cents)[:, None], 1e-12)
+        cents = _unit_rows(cents)
     return cents
 
 
@@ -473,8 +523,8 @@ def pca_power(
     """Top principal component of the embedding cloud by power iteration
     on a deterministic driver sample — (mean, component, eigenvalue).
 
-    Sample selection is the _centroid_matrix md5-rank idiom (order-free,
-    one TakeOrdered corpus scan). All float accumulation is the
+    The sample is _driver_sample's (order-free md5 rank, one TakeOrdered
+    corpus scan). All float accumulation is the
     sequential fold (_seq_dots/_seq_norms + member-order sums), so the
     whole computation — mean, covariance, every matvec and
     normalization — replays bit-for-bit in SQL (q207's oracle), exactly
@@ -484,15 +534,9 @@ def pca_power(
     Scale: the corpus only pays one sample scan; covariance and the
     power loop are dim^2-sized driver math. Downstream projection
     (dot(x - mean, v)) is a JVM-side column expression — no UDF."""
-    ranked = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.md5(F.concat(F.lit(str(seed)), F.col(id_col).cast("string"))).alias("h"),
-    )
-    rows = ranked.orderBy("h", "id").limit(sample_size).collect()
-    if not rows:
+    x = _driver_sample(corpus, id_col, vec_col, sample_size, seed)
+    if not len(x):
         return np.zeros(0), np.zeros(0), 0.0
-    x = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
     n, dim = x.shape
     mean = np.zeros(dim)
     for r in x:  # member-order fold (sample hash order)
@@ -526,8 +570,7 @@ def ivf_assign(
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def nearest(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(_seq_norms(m)[:, None], 1e-12)
+        m = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
         # sequential dim-order fold + STABLE sort: dots are bit-identical
         # to the SQL oracle's list_sum fold, and ties break to the lowest
         # centroid id on both sides (np.argsort default introsort is NOT
@@ -559,8 +602,7 @@ def ivf_probe_order(
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def order_all(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(_seq_norms(m)[:, None], 1e-12)
+        m = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
         sims = _seq_dots(m, centroids)
         top = np.argsort(-sims, axis=1, kind="stable")
         return pd.Series(list(top.astype(np.int32)))
@@ -595,37 +637,17 @@ def ivf_topk(
     O(Q * N * n_probe / K) versus brute force O(Q * N). Skewed clusters
     are AQE's problem (skew-join split); raising K tightens lists."""
     cents = _centroid_matrix(corpus, id_col, vec_col, n_centroids)
-    if cents.shape[0] == 0:  # empty corpus: schema-stable empty result
-        return queries.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).alias("sim"),
-            F.lit(1).alias("rank"),
-        )
-    cb = ivf_assign(corpus, cents, id_col, vec_col, n_probe=1).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__cv"),
-        norm(F.col("embedding")).alias("__cn"),
-        "cluster",
+    if cents.shape[0] == 0:
+        return _empty_topk(queries, id_col)
+    cb = _vec_side(
+        ivf_assign(corpus, cents, id_col, vec_col, n_probe=1),
+        "vec_id", "embedding", "neighbor_id", "c", "cluster",
     )
-    qb = ivf_assign(queries, cents, id_col, vec_col, n_probe=n_probe).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qv"),
-        norm(F.col("embedding")).alias("__qn"),
-        "cluster",
+    qb = _vec_side(
+        ivf_assign(queries, cents, id_col, vec_col, n_probe=n_probe),
+        "vec_id", "embedding", "query_id", "q", "cluster",
     )
-    sims = (
-        qb.join(cb, "cluster")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6).alias("sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])  # multi-probe overlap
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_topk(qb.join(cb, "cluster"), k, distinct_pairs=True)
 
 
 def lsh_ann_topk(
@@ -645,28 +667,13 @@ def lsh_ann_topk(
     (see lsh_band_params) — a fixed plane count leaves per-query probe
     cost growing linearly with the corpus."""
 
-    def side(df: DataFrame, id_alias: str, v_alias: str, n_alias: str) -> DataFrame:
-        v = F.col(vec_col)
-        return df.select(
-            F.col(id_col).alias(id_alias),
-            v.alias(v_alias),
-            norm(v).alias(n_alias),
-            _hyperplane_codes(v, 1, n_planes, seed, dim)[0].alias("bucket"),
-        )
+    def side(df: DataFrame, id_alias: str, tag: str) -> DataFrame:
+        bucket = _hyperplane_codes(F.col(vec_col), 1, n_planes, seed, dim)[0]
+        return _vec_side(df, id_col, vec_col, id_alias, tag, bucket.alias("bucket"))
 
-    qb = side(queries, "query_id", "__qv", "__qn")
-    cb = side(corpus, "neighbor_id", "__cv", "__cn")
-    sims = (
-        qb.join(cb, "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    qb = side(queries, "query_id", "q")
+    cb = side(corpus, "neighbor_id", "c")
+    return _exact_topk(qb.join(cb, "bucket"), k)
 
 
 def quantization_profile(
@@ -738,31 +745,25 @@ def pq_codebooks(
     """Per-subspace Euclidean k-means codebooks, shape
     (m_subspaces, n_codes, dim/m_subspaces).
 
-    Same determinism scheme as _centroid_matrix: hash-ordered sample
-    (order-free under any partitioning), farthest-point init per
-    subspace, Lloyd on the driver, argmin ties -> lowest index. Euclidean
+    Same determinism scheme as _centroid_matrix: _driver_sample's
+    hash-ordered sample (order-free under any partitioning),
+    farthest-point init per subspace, Lloyd on the driver, argmin ties -> lowest index. Euclidean
     (not spherical) because PQ approximates raw L2 geometry per subspace;
     the final re-rank restores exact cosine; inputs are L2-normalized
     first so subspace L2 ranks consistently with cosine.
 
     Scale: one TakeOrdered corpus scan for the sample; the codebooks are
     m*K*sub_dim doubles (tiny) and broadcast inside UDF closures."""
-    ranked = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.md5(F.concat(F.lit(str(seed)), F.col(id_col).cast("string"))).alias("h"),
-    )
-    rows = ranked.orderBy("h", "id").limit(max(sample_size, n_codes)).collect()
-    if not rows:
+    x = _driver_sample(corpus, id_col, vec_col, max(sample_size, n_codes), seed)
+    if not len(x):
         return np.zeros((0, 0, 0))
-    x = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
     # L2-normalize: the ANN truth metric is cosine, and on the unit sphere
     # squared L2 = 2 - 2*cos, so per-subspace Euclidean codebooks rank
     # candidates consistently with the exact re-rank.
     # All accumulation below is the sequential dim-/member-order fold
     # (see _seq_dots) so q115's oracle can replay the whole codebook
     # training in SQL, exactly like the q47 quantizer replay.
-    x = x / np.maximum(_seq_norms(x)[:, None], 1e-12)
+    x = _unit_rows(x)
     dim = x.shape[1]
     if dim % m_subspaces:
         raise ValueError(f"dim {dim} not divisible by m_subspaces {m_subspaces}")
@@ -808,8 +809,7 @@ def pq_encode(
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def encode(vecs: pd.Series) -> pd.Series:
-        x = np.stack(vecs.to_numpy()).astype(np.float64)  # (batch, dim)
-        x = x / np.maximum(_seq_norms(x)[:, None], 1e-12)
+        x = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))  # (batch, dim)
         out = np.zeros((len(x), m), dtype=np.int32)
         for j in range(m):
             xj = x[:, j * sub : (j + 1) * sub]
@@ -851,35 +851,23 @@ def pq_topk(
     """
     books = pq_codebooks(corpus, id_col, vec_col, m_subspaces, n_codes)
     if books.size == 0:
-        return queries.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).alias("sim"),
-            F.lit(1).alias("rank"),
-        )
+        return _empty_topk(queries, id_col)
     m, nc, sub = books.shape
 
     @pandas_udf(T.ArrayType(T.DoubleType()))
     def dist_table(vecs: pd.Series) -> pd.Series:
-        x = np.stack(vecs.to_numpy()).astype(np.float64)
-        x = x / np.maximum(_seq_norms(x)[:, None], 1e-12)
+        x = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
         tables = np.zeros((len(x), m * nc))
         for j in range(m):
             xj = x[:, j * sub : (j + 1) * sub]
             tables[:, j * nc : (j + 1) * nc] = _seq_sqdist(xj, books[j])
         return pd.Series(list(tables))
 
-    cb = pq_encode(corpus, books, id_col, vec_col).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__cv"),
-        norm(F.col("embedding")).alias("__cn"),
-        "codes",
+    cb = _vec_side(
+        pq_encode(corpus, books, id_col, vec_col), "vec_id", "embedding", "neighbor_id", "c", "codes"
     )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
-        dist_table(F.col(vec_col)).alias("__tbl"),
+    qb = _vec_side(
+        queries, id_col, vec_col, "query_id", "q", dist_table(F.col(vec_col)).alias("__tbl")
     )
     # ADC: sum_j table[j*nc + codes[j]] — JVM-side fold over the code array
     adc = F.aggregate(
@@ -899,16 +887,7 @@ def pq_topk(
         .withColumn("__r", F.row_number().over(wq))
         .filter(F.col("__r") <= refine * k)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6).alias("sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, k)
 
 
 def semdedup(
@@ -1088,11 +1067,7 @@ def mmr_over_candidates(
     mmr_rerank (whose docstring has the measured rationale)."""
     from ..functions.core import fits_on_driver, round_half_up
 
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__v"),
-        norm(F.col(vec_col)).alias("__n"),
-    )
+    vecs = _vec_side(corpus, id_col, vec_col, "neighbor_id", "")
     # localCheckpoint, not persist: each greedy step references these
     # frames twice, so with plain persist the ANALYZED plan tree doubles
     # per step (2^k copies of the crossJoin+window subtree — measured
@@ -1119,9 +1094,7 @@ def mmr_over_candidates(
             "query_id",
             "a_id",
             "b_id",
-            F.round(
-                dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
-            ).alias("sim"),
+            _pair_cosine("a", "b").alias("sim"),
         )
         .localCheckpoint(eager=True)
     )

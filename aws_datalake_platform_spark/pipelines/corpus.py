@@ -91,15 +91,13 @@ def curate_corpus(
     # LSH pass never hashes byte-identical copies twice; only non-
     # canonical members are dropped (join is an anti on losers).
     if near_dup_threshold is not None:
-        from ..operators.dedup import connected_components, minhash_lsh_pairs
+        from ..operators.dedup import dup_clusters, minhash_lsh_pairs
 
         pairs = minhash_lsh_pairs(
             deduped, "doc_id", "text", threshold=near_dup_threshold
         )
-        comp = connected_components(pairs)
-        losers = comp.filter(F.col("node") != F.col("comp")).select(
-            F.col("node").alias("doc_id")
-        )
+        clusters = dup_clusters(pairs)
+        losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
         deduped = deduped.join(losers, "doc_id", "left_anti")
 
     # 1c. optional excerpt drop: shingle containment AFTER the dedup

@@ -90,7 +90,7 @@ def curate_incremental(
     """
     from ..operators.dedup import (
         build_dedup_index,
-        connected_components,
+        dup_clusters,
         exact_dedup,
         incremental_dedup_verdicts,
         minhash_lsh_pairs,
@@ -124,10 +124,8 @@ def curate_incremental(
         surv, "doc_id", "text",
         k=_K, num_hashes=_NUM_HASHES, bands=_BANDS, threshold=near_dup_threshold,
     )
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    losers = comp.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("doc_id")
-    )
+    clusters = dup_clusters(pairs)
+    losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     surv = surv.join(losers, "doc_id", "left_anti").localCheckpoint(eager=True)
     report["n_after_batch_near"] = surv.count()
 

@@ -1061,15 +1061,12 @@ def q214_dup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the singleton count is one anti-join. No new scale surface.
     The from-index twin (pipelines/audit_index.py) re-aggregates the
     MATERIALIZED cluster relation instead of recomputing the LSH."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import dup_clusters
     from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir)
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    clusters = comp.select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
-    )
+    clusters = dup_clusters(pairs).select("doc_id", "cluster_id")
     return _dup_cluster_histogram(docs, clusters)
 
 

@@ -625,7 +625,7 @@ def q417_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines/audit_index.py) and this query drops to a sub-second
     re-aggregation; the fresh-compute registry entry IS the
     full-recompute twin (q214/q277 precedent)."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import dup_clusters
     from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
@@ -634,9 +634,7 @@ def q417_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nondeterministic Arrow-UDF lineage (the q191 localCheckpoint
     # lesson, SURVEY round-7 #4)
     pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir).localCheckpoint(eager=True)
-    comp = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
-    )
+    comp = dup_clusters(pairs).select("doc_id", "cluster_id")
     return _split_leakage(docs, pairs, comp)
 
 
@@ -1900,14 +1898,14 @@ def q425_dedup_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one map-side pass; the rollup is a per-source aggregate. In a
     deployment the cluster relation reads from the materialized audit
     index and this drops to a re-aggregation (the q214 pattern)."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import dup_clusters
     from .queries import QUERY_REGISTRY as _REGISTRY
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _REGISTRY["q24_minhash_lsh_dedup"].fn(spark, sf_dir)
-    comp = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"),
-        F.when(F.col("node") == F.col("comp"), 1).otherwise(0).alias("keep"),
+    comp = dup_clusters(pairs).select(
+        "doc_id",
+        F.when(F.col("doc_id") == F.col("cluster_id"), 1).otherwise(0).alias("keep"),
     )
     doc_tok = (
         docs.filter(F.length(F.trim("text")) > 0)

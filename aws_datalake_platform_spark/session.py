@@ -20,6 +20,20 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_mem() -> str:
+    """48g, or half the host's MemTotal when that is smaller: a heap that
+    outgrows physical memory ends in a kernel OOM kill, not a Java
+    OutOfMemoryError. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(48 * 1024, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "aws_datalake_platform_spark",
     master: str | None = None,
@@ -70,7 +84,7 @@ def get_spark(
         # r4). 1 MB keeps events useful and bounds the cost.
         .config("spark.sql.maxPlanStringLength", str(1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     if master is not None:
         builder = builder.master(master)

@@ -254,6 +254,37 @@ def test_pq_topk_recall_vs_brute_force(spark, emb):
     assert pq == pq2
 
 
+def test_ann_at_full_recall_equals_brute_force(spark, emb):
+    """IVF probing every list and PQ re-ranking the whole corpus see every
+    candidate, so they must return exactly brute force's (query_id,
+    neighbor_id, sim, rank) rows: one score and one tie-break for all.
+    Two exact copies of vector 3 planted under ids 20003 and 10003 tie
+    on sim for query 3; the smaller neighbor_id ranks first."""
+    import math
+
+    from aws_datalake_platform_spark.operators.similarity import ivf_topk, pq_topk
+
+    twin = emb.filter("vec_id = 3")
+    corpus = emb
+    for twin_id in (20003, 10003):
+        corpus = corpus.unionByName(twin.withColumn("vec_id", F.lit(twin_id).cast("long")))
+    queries = corpus.filter("vec_id < 10")
+    k = 5
+    n = corpus.count()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("query_id", "neighbor_id", "sim", "rank").collect())
+
+    exact = rows(brute_force_topk(queries, corpus, k=k))
+    assert len(exact) == 10 * k
+    assert rows(ivf_topk(queries, corpus, k=k, n_centroids=16, n_probe=16)) == exact
+    assert rows(pq_topk(queries, corpus, k=k, refine=math.ceil(n / k))) == exact
+    top_of_3 = sorted((r for r in exact if r[0] == 3), key=lambda r: r[3])[:2]
+    assert [r[1] for r in top_of_3] == [10003, 20003]
+    assert [r[3] for r in top_of_3] == [1, 2]
+    assert top_of_3[0][2] == top_of_3[1][2]
+
+
 def test_audio_pcm_decode_known_signal(spark):
     """int16 PCM decode + windowed features verified against a hand-built
     waveform: constant amplitude alternating signal -> exact sum of
