@@ -85,7 +85,10 @@ def _driver_checked() -> set[str]:
 # operators then moved onto one exact-cosine scorer, one driver sample and
 # one row normalization, and q214/q417/q425 onto dedup.dup_clusters: every
 # query whose build reaches a changed operators.similarity function or one
-# of those three is listed.
+# of those three is listed. Then semdedup moved onto one nearest-centroid
+# path, ivf_assign/ivf_probe_order onto one probe-rank UDF, _exact_topk
+# lost its dedup option and q47/q209 gained the PK guard: every query
+# whose build reaches one of those is listed.
 _CHANGED_AFTER_ROUND = {
     "q337_zorder_skip_estimate": 11,
     "q368_hits_hubs_authorities": 11,
@@ -123,6 +126,7 @@ _CHANGED_AFTER_ROUND = {
     "q238_ivf_nprobe_plan": 11,
     "q273_knn_outlier_scores": 11,
     "q278_cluster_share_drift": 11,
+    "q201_semdedup": 11,
 }
 
 

@@ -162,9 +162,10 @@ def load_table_pk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     queries (q64 q107 q118 q203 q238 q332) whose oracles carry per-id
     ROW_NUMBER/GROUP BY steps that silently dedup duplicate ids while
     the engine processes every physical row — undefined semantics on
-    PK-violating input. Those queries load their keyed table through
-    this wrapper so such input raises ``DuplicateKeyError`` instead of
-    silently returning different numbers. One extra count/count-distinct
+    PK-violating input. Those queries, and the IVF top-k queries q47 and
+    q209, load their keyed table through this wrapper so such input
+    raises ``DuplicateKeyError`` instead of silently returning different
+    numbers. One extra count/count-distinct
     aggregate per (lake, table) per process (cached; column-pruned scan
     of just the key column).
     """

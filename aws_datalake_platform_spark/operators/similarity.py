@@ -78,19 +78,15 @@ def _pair_cosine(a: str, b: str) -> Column:
     )
 
 
-def _exact_topk(cands: DataFrame, k: int, distinct_pairs: bool = False) -> DataFrame:
+def _exact_topk(cands: DataFrame, k: int) -> DataFrame:
     """The exact scorer behind every top-k search: joined candidates
     (query_id, __vq, __nq, neighbor_id, __vc, __nc) -> (query_id,
     neighbor_id, sim, rank) for the k best per query. Self-pairs are
     dropped, sim is _pair_cosine, and rank orders (sim desc, neighbor_id
-    asc) so ties break the same way on every engine and partitioning.
-    ``distinct_pairs`` drops pairs a query reached by more than one
-    candidate route (IVF multi-probe) before ranking."""
+    asc) so ties break the same way on every engine and partitioning."""
     sims = cands.filter(F.col("neighbor_id") != F.col("query_id")).select(
         "query_id", "neighbor_id", _pair_cosine("q", "c").alias("sim")
     )
-    if distinct_pairs:
-        sims = sims.dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -557,6 +553,24 @@ def pca_power(
     return mean, v, lam
 
 
+def _probe_ranks(vec: Column, centroids: np.ndarray, n_probe: int | None = None) -> Column:
+    """array<int> of each vector's centroid ids, nearest (by cosine)
+    first, the first ``n_probe`` of them (all when None). Dots are the
+    sequential dim-order fold, bit-identical to the SQL oracle's
+    list_sum fold, and the argsort is STABLE so ties break to the lowest
+    centroid id on both sides (np.argsort's default introsort is not
+    stable and would desync from ROW_NUMBER ... ORDER BY dv DESC, cid)."""
+
+    @pandas_udf(T.ArrayType(T.IntegerType()))
+    def nearest(vecs: pd.Series) -> pd.Series:
+        m = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
+        sims = _seq_dots(m, centroids)  # (batch, K)
+        top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
+        return pd.Series(list(top.astype(np.int32)))
+
+    return nearest(vec)
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: np.ndarray,
@@ -565,25 +579,12 @@ def ivf_assign(
     n_probe: int = 1,
 ) -> DataFrame:
     """Attach the n_probe nearest centroid ids (by cosine) to each vector.
-    One numpy matmul per Arrow batch, map-side only; output explodes to
-    n_probe rows per vector (n_probe=1 for corpus, >1 for queries)."""
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def nearest(vecs: pd.Series) -> pd.Series:
-        m = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
-        # sequential dim-order fold + STABLE sort: dots are bit-identical
-        # to the SQL oracle's list_sum fold, and ties break to the lowest
-        # centroid id on both sides (np.argsort default introsort is NOT
-        # stable — a tie would desync from ROW_NUMBER ... ORDER BY dv
-        # DESC, cid)
-        sims = _seq_dots(m, centroids)  # (batch, K)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(top.astype(np.int32)))
-
+    One vectorized fold per Arrow batch, map-side only; output explodes
+    to n_probe rows per vector (n_probe=1 for corpus, >1 for queries)."""
     return df.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
-        F.explode(nearest(F.col(vec_col))).alias("cluster"),
+        F.explode(_probe_ranks(F.col(vec_col), centroids, n_probe)).alias("cluster"),
     )
 
 
@@ -596,21 +597,11 @@ def ivf_probe_order(
     """Full centroid probe order per vector: ivf_assign generalized to
     keep EVERY centroid with its probe rank (prank=1 is the nearest
     list). Lets an n_probe sweep (q238) reuse one assignment pass —
-    filter prank <= p instead of re-assigning per configuration. Same
-    sequential-fold dots + stable argsort contract as ivf_assign, so
-    ranks match the SQL replay's ROW_NUMBER ... ORDER BY dot DESC, cid."""
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def order_all(vecs: pd.Series) -> pd.Series:
-        m = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
-        sims = _seq_dots(m, centroids)
-        top = np.argsort(-sims, axis=1, kind="stable")
-        return pd.Series(list(top.astype(np.int32)))
-
+    filter prank <= p instead of re-assigning per configuration."""
     return df.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
-        F.posexplode(order_all(F.col(vec_col))).alias("pos", "cluster"),
+        F.posexplode(_probe_ranks(F.col(vec_col), centroids)).alias("pos", "cluster"),
     ).select(
         "vec_id",
         "embedding",
@@ -647,7 +638,7 @@ def ivf_topk(
         ivf_assign(queries, cents, id_col, vec_col, n_probe=n_probe),
         "vec_id", "embedding", "query_id", "q", "cluster",
     )
-    return _exact_topk(qb.join(cb, "cluster"), k, distinct_pairs=True)
+    return _exact_topk(qb.join(cb, "cluster"), k)
 
 
 def lsh_ann_topk(
@@ -897,7 +888,6 @@ def semdedup(
     n_centroids: int = 8,
     threshold: float = 0.4,
     centroids: DataFrame | None = None,
-    assign_strategy: str = "exact",
 ) -> DataFrame:
     """SemDeDup (arXiv:2303.09540): semantic dedup with the quadratic
     pair search bounded to CLUSTERS.
@@ -910,101 +900,74 @@ def semdedup(
 
     ``centroids`` defaults to the ``n_centroids`` smallest-id vectors —
     deterministic, which is what lets q201's DuckDB oracle replay the
-    whole flow. Pass a learned k-means frame (``ivf_assign``'s input
-    shape: cid, ce) for the production path.
+    whole flow. Pass a learned k-means frame (cid, ce) for the
+    production path; its K rows are collected (bounded, the q47 IVF
+    precedent) into the assignment UDF's closure.
 
-    ``assign_strategy`` picks the nearest-centroid implementation:
+    Assignment is map-side: one Arrow UDF per batch returns each
+    vector's K unrounded cosines, folded in dimension order exactly like
+    ``pair_cosine_arrow`` (bit-identical to the interpreted ``cosine()``
+    the oracle replays); Spark rounds them to 6 places and takes the
+    FIRST maximum over the cid-sorted centroids, so a rounding tie goes
+    to the smaller cid. No N*K-row shuffle, so cost grows with K only
+    in the UDF's K*dim fold. A NULL, zero or NULL-element vector, or
+    one whose length differs from the centroids', has no nearest
+    centroid: the UDF raises ValueError naming its vec_id (on the
+    executor, so it surfaces at the first action).
 
-    - ``"exact"`` (q201's oracle path): broadcast crossJoin + per-vector
-      window — bit-replayable in SQL, but it pushes N*K rows through a
-      partitionBy(vec_id) shuffle, so the cost GROWS with K: a 50k x 10x
-      stress measured K=512 at 150 s vs K=128 at 40 s even though the
-      pair join shrank 4x. Oracle-K only (K <= a few dozen).
-    - ``"vectorized"`` (production): one numpy matmul + argmax per Arrow
-      batch against the broadcast centroid matrix — map-side, NO
-      assignment shuffle, O(N*K) flops in BLAS. Same rounded-cosine
-      argmax and smaller-cid tie-break; pairwise-summed dots can differ
-      from the sequential path by ulps, which survives round(.,6) only
-      when two centroids tie to six decimals (measure-zero for learned
-      centroids, same argument as the q59 plane signs).
-
-    The pair join is shared: one shuffle on the cluster key, quadratic
-    only within a cluster. K is the knob — pairs per cluster shrink
+    The pair join shuffles once on the cluster key and scores pairs with
+    the shared exact scorer (_vec_side + _pair_cosine: each norm is
+    computed once per row, not per pair). Pairs per cluster shrink
     ~K^2-fold for balanced corpora, so a mega-cluster means K is too
     small for the corpus; grow K (SemDeDup runs K in the tens of
-    thousands at web scale, which is exactly the vectorized regime)
-    rather than capping, which would silently skip comparisons.
+    thousands at web scale) rather than capping, which would silently
+    skip comparisons. 50k x 64-dim, learned centroids, threshold 0.9,
+    4 cores: K=64 in ~66 s, K=256 in ~30 s (the earlier BLAS assignment
+    with per-pair norms: 297 s and 65 s), where the pair check
+    dominates.
     """
-    from pyspark.sql import Window
-
     emb = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     if centroids is None:
-        ids = emb.select("vec_id").orderBy("vec_id").limit(n_centroids)
-        centroids = emb.join(F.broadcast(ids), "vec_id", "left_semi").select(
+        centroids = emb.orderBy("vec_id").limit(n_centroids).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
         )
-    if assign_strategy == "vectorized":
-        # bounded collect: K centroid rows (the q47 IVF precedent)
-        cents = centroids.select("cid", "ce").orderBy("cid").collect()
-        cid_arr = np.array([r["cid"] for r in cents], dtype=np.int64)
-        cmat = np.array([[float(x) for x in r["ce"]] for r in cents], dtype=np.float64)
-        cmat = cmat / np.sqrt((cmat * cmat).sum(axis=1, keepdims=True))
-        out_schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                emb.schema["embedding"],
-                T.StructField("cluster", T.LongType()),
-            ]
+    cents = centroids.select("cid", "ce").orderBy("cid").collect()
+    dim = max((len(r["ce"]) for r in cents if r["ce"] is not None), default=0)
+    cmat, cnorm = _semdedup_rows(
+        pd.Series([r["cid"] for r in cents]), pd.Series([r["ce"] for r in cents]), dim
+    )
+
+    @pandas_udf(T.ArrayType(T.DoubleType()))
+    def centroid_cosines(ids: pd.Series, vecs: pd.Series) -> pd.Series:
+        x, norms = _semdedup_rows(ids, vecs, dim)
+        return pd.Series(list(_seq_dots(x, cmat) / (norms[:, None] * cnorm[None, :])))
+
+    if not len(cents):  # empty corpus or no centroids: nothing to assign
+        assign = emb.limit(0).select("vec_id", "embedding", F.lit(0).cast("long").alias("cluster"))
+    else:
+        r = F.transform(
+            centroid_cosines(F.col("vec_id"), F.col("embedding")), lambda c: F.round(c, 6)
         )
-
-        def _argmax(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                v = v / np.sqrt((v * v).sum(axis=1, keepdims=True))
-                sims = np.round(v @ cmat.T, 6)
-                # argmax returns the FIRST max; cid_arr is sorted, so ties
-                # break to the smaller centroid id exactly like the window
-                yield pdf.assign(cluster=cid_arr[np.argmax(sims, axis=1)])[
-                    ["vec_id", "embedding", "cluster"]
-                ]
-
-        # the pair join references assign three times (a, b, final join);
-        # truncate lineage so the matmul pass runs once, not three times.
-        # The exact path skips this: K is small by contract there, and
-        # checkpointing would hide the broadcast-join plan shape the
-        # oracle-path tests pin.
-        assign = emb.mapInPandas(_argmax, out_schema).localCheckpoint(eager=False)
-    elif assign_strategy == "exact":
-        sims = emb.crossJoin(F.broadcast(centroids)).select(
+        # the FIRST maximum over the cid-sorted centroids: ties -> smaller cid
+        cids = F.lit([int(c["cid"]) for c in cents]).cast("array<bigint>")
+        assign = emb.select("vec_id", "embedding", r.alias("__r")).select(
             "vec_id",
             "embedding",
-            "cid",
-            F.round(cosine(F.col("embedding"), F.col("ce")), 6).alias("csim"),
+            F.element_at(cids, F.array_position("__r", F.array_max("__r")).cast("int")).alias(
+                "cluster"
+            ),
         )
-        rk = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
-        assign = (
-            sims.withColumn("rk", F.row_number().over(rk))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", "embedding", F.col("cid").alias("cluster"))
-        )
-    else:
-        raise ValueError(f"unknown assign_strategy: {assign_strategy!r}")
-    a = assign.alias("a")
-    b = assign.alias("b")
+    # the pair join reads assign three times (both sides, final join):
+    # truncate lineage so the UDF pass and the caller's input chain run
+    # once, not three times
+    assign = assign.localCheckpoint(eager=False)
+    a = _vec_side(assign, "vec_id", "embedding", "vec_a", "a", "cluster")
+    b = _vec_side(assign, "vec_id", "embedding", "vec_b", "b", "cluster")
     dup = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("b.vec_id") < F.col("a.vec_id")),
-        )
-        .filter(
-            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
-            >= F.lit(threshold)
-        )
-        .groupBy(F.col("a.vec_id").alias("vec_id"))
-        .agg(F.min(F.col("b.vec_id")).alias("dup_of"))
+        a.join(b, "cluster")
+        .filter((F.col("vec_b") < F.col("vec_a")) & (_pair_cosine("a", "b") >= threshold))
+        .groupBy(F.col("vec_a").alias("vec_id"))
+        .agg(F.min("vec_b").alias("dup_of"))
     )
     return assign.join(dup, "vec_id", "left").select(
         "vec_id",
@@ -1012,6 +975,25 @@ def semdedup(
         F.coalesce(F.col("dup_of"), F.lit(-1)).cast("long").alias("dup_of"),
         F.col("dup_of").isNull().alias("kept"),
     )
+
+
+def _semdedup_rows(ids: pd.Series, vecs: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(x, norms): ``vecs`` as an (n, dim) float64 matrix and its
+    _seq_norms. A NULL vector, a length other than ``dim``, a NULL or NaN
+    element or a zero vector has no cosine to any centroid, so it raises
+    ValueError naming the first such id instead of being mis-assigned."""
+    lens = vecs.map(lambda v: -1 if v is None else len(v)).to_numpy()
+    if (lens != dim).any():
+        i = int(np.argmax(lens != dim))
+        why = "is NULL" if lens[i] < 0 else f"has {lens[i]} elements, the centroids {dim}"
+    else:
+        x = np.array([np.asarray(v, dtype=np.float64) for v in vecs]).reshape(len(vecs), dim)
+        norms = _seq_norms(x)
+        if (norms > 0).all():
+            return x, norms
+        i = int(np.argmax(~(norms > 0)))
+        why = "has a NULL or NaN element" if np.isnan(norms[i]) else "is a zero vector"
+    raise ValueError(f"semdedup: vec_id {ids.iloc[i]} embedding {why}")
 
 
 def mmr_rerank(

@@ -191,11 +191,10 @@ def curate_corpus(
     # 1d. optional SEMANTIC dedup (SemDeDup, q201) — the production
     # configuration the oracle path can't exercise: learned k-means
     # centroids from the IVF coarse quantizer (q47's _centroid_matrix)
-    # wired into the map-side vectorized assignment, so the only
-    # corpus-sized costs are one Arrow matmul pass and the
-    # cluster-bounded pair join. Runs AFTER the text-level passes:
-    # byte/shingle duplicates are already gone, so the embedding pass
-    # only pays for the residual. Drops any doc whose embedding has a
+    # wired into semdedup's map-side assignment, so the only corpus-sized
+    # costs are one Arrow pass and the cluster-bounded pair join. Runs
+    # AFTER the text-level passes: byte/shingle duplicates are already
+    # gone, so the embedding pass only pays for the residual. Drops any doc whose embedding has a
     # lower-id same-cluster neighbor at cosine >= semantic_threshold.
     n_pre_semantic = None
     if semantic_threshold is not None and embeddings is not None:
@@ -213,12 +212,7 @@ def curate_corpus(
                 [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
                 "cid BIGINT, ce ARRAY<DOUBLE>",
             )
-            verdicts = semdedup(
-                emb,
-                centroids=cdf,
-                threshold=semantic_threshold,
-                assign_strategy="vectorized",
-            )
+            verdicts = semdedup(emb, centroids=cdf, threshold=semantic_threshold)
             sem_losers = verdicts.filter(~F.col("kept")).select(
                 F.col("vec_id").alias("doc_id")
             )

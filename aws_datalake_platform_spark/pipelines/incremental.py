@@ -206,7 +206,12 @@ def _semantic_pass(
     batch doc that survived the TEXT passes (vec_id, cluster, embedding);
     the caller re-filters it to the final survivor set before appending.
     """
-    from ..operators.similarity import _centroid_matrix, cosine, semdedup
+    from ..operators.similarity import (
+        _centroid_matrix,
+        _pair_cosine,
+        _vec_side,
+        semdedup,
+    )
 
     id_col = "doc_id" if "doc_id" in batch_embeddings.columns else "vec_id"
     emb = batch_embeddings.select(
@@ -227,11 +232,8 @@ def _semantic_pass(
         write_snapshot(cdf, _path(state_dir, CENTROIDS))
     cdf = read_snapshot(spark, _path(state_dir, CENTROIDS))
 
-    # within-batch SemDeDup (vectorized map-side assignment); verdicts
-    # carries (vec_id, cluster, dup_of, kept)
-    verdicts = semdedup(
-        emb, centroids=cdf, threshold=threshold, assign_strategy="vectorized"
-    )
+    # within-batch SemDeDup; verdicts carries (vec_id, cluster, dup_of, kept)
+    verdicts = semdedup(emb, centroids=cdf, threshold=threshold)
     assigned = verdicts.select("vec_id", "cluster").join(emb, "vec_id")
     dropped_in_batch = verdicts.filter(~F.col("kept")).select("vec_id")
 
@@ -239,15 +241,12 @@ def _semantic_pass(
     # embeddings — bounded by cluster co-membership, never batch x corpus
     if _has_state(state_dir, SEMANTIC_INDEX):
         stored = read_snapshot(spark, _path(state_dir, SEMANTIC_INDEX))
+        n = _vec_side(assigned, "vec_id", "embedding", "vec_id", "n", "cluster")
+        c = _vec_side(stored, "vec_id", "embedding", "__sid", "c", "cluster")
         vs_corpus = (
-            assigned.alias("n")
-            .join(stored.alias("c"), F.col("n.cluster") == F.col("c.cluster"))
-            .filter(
-                F.round(
-                    cosine(F.col("n.embedding"), F.col("c.embedding")), 6
-                ) >= F.lit(threshold)
-            )
-            .select(F.col("n.vec_id").alias("vec_id"))
+            n.join(c, "cluster")
+            .filter(_pair_cosine("n", "c") >= threshold)
+            .select("vec_id")
             .distinct()
         )
         dropped = dropped_in_batch.union(vs_corpus).distinct()

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, load_table_pk
 from ..operators.similarity import ivf_topk
 from ..operators.sketches import (
     hll_estimate,
@@ -453,7 +453,7 @@ def q47_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one TakeOrdered scan), so the oracle-replayable sequential math
     costs nothing at 100 TB — the quantizer never touches the corpus
     beyond that single sample scan."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = load_table_pk(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivf_topk(queries, emb, k=5, n_centroids=16, n_probe=4)
 

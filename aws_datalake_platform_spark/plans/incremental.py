@@ -206,11 +206,12 @@ def _semdedup_sql() -> str:
     "rows-only by nature.",
 )
 def q201_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: assignment is a broadcast crossJoin against K centroid rows
-    — map-side, no shuffle of the corpus; the pair search shuffles once
-    on the cluster key and is quadratic only within a cluster. K is the
-    scale knob (SemDeDup runs tens of thousands of clusters at web
-    scale); a skewed mega-cluster means K is too small for the corpus.
+    """Scale: assignment is one Arrow UDF pass against the K collected
+    centroid rows — map-side, no shuffle of the corpus; the pair search
+    shuffles once on the cluster key and is quadratic only within a
+    cluster. K is the scale knob (SemDeDup runs tens of thousands of
+    clusters at web scale); a skewed mega-cluster means K is too small
+    for the corpus.
     Reference tie-in: the embedding-dedup twin of text near-dup K1-K3.
     The deterministic seed centroids (the K smallest vec_ids, mirrored
     as ORDER BY vec_id LIMIT K in the oracle) are what keep the oracle

@@ -639,7 +639,7 @@ def q209_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduling it, not a per-query cost."""
     from ..operators.similarity import brute_force_topk, ivf_topk
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = load_table_pk(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = emb.filter(F.col("vec_id") < 10)
     exact = brute_force_topk(probes, emb, k=5).select("query_id", "neighbor_id")
     ivf = ivf_topk(probes, emb, k=5, n_centroids=16, n_probe=4).select(
@@ -3265,43 +3265,29 @@ def q238_ivf_nprobe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference delegates to manual Athena queries."""
     from ..operators.similarity import (
         _centroid_matrix,
+        _pair_cosine,
+        _vec_side,
         brute_force_topk,
-        dot,
         ivf_assign,
         ivf_probe_order,
-        norm,
     )
 
     emb = load_table_pk(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = emb.filter(F.col("vec_id") < _Q238_NQ)
     cents = _centroid_matrix(emb, "vec_id", "embedding", _Q238_NC)
 
-    qall = ivf_probe_order(probes, cents, "vec_id", "embedding").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qv"),
-        norm(F.col("embedding")).alias("__qn"),
-        "cluster",
-        "prank",
+    qall = _vec_side(
+        ivf_probe_order(probes, cents, "vec_id", "embedding"),
+        "vec_id", "embedding", "query_id", "q", "cluster", "prank",
     )
-    cb = ivf_assign(emb, cents, "vec_id", "embedding", n_probe=1).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__cv"),
-        norm(F.col("embedding")).alias("__cn"),
-        "cluster",
+    cb = _vec_side(
+        ivf_assign(emb, cents, "vec_id", "embedding", n_probe=1),
+        "vec_id", "embedding", "neighbor_id", "c", "cluster",
     )
     cand = (
         qall.join(cb, "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "prank",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("sim"),
-        )
+        .select("query_id", "prank", "neighbor_id", _pair_cosine("q", "c").alias("sim"))
     )
     cfg = spark.createDataFrame([(p,) for p in _Q238_PROBES], "p INT")
     ranked = (

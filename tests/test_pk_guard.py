@@ -6,7 +6,9 @@ oracle-side per-id dedup vs physical-row engine semantics). The engine
 previously never *checked* the contract: duplicate ids produced
 silently different numbers. Now those queries load their keyed table
 through ``catalog.load_table_pk`` and raise ``DuplicateKeyError``; the
-``validate-lake`` CLI locates offenders across the whole lake.
+``validate-lake`` CLI locates offenders across the whole lake. q47 and
+q209 joined them: two different vectors under one vec_id made IVF
+top-k score an arbitrary copy, and its sim differed from the oracle's.
 """
 
 from __future__ import annotations
@@ -30,10 +32,12 @@ from aws_datalake_platform_spark.validation import (
 from .conftest import SF_SMOKE
 
 GUARDED_QUERIES = (
+    "q47_ann_ivf_topk",
     "q64_winnow_fingerprints",
     "q107_recursive_cte",
     "q118_audio_window_energy",
     "q203_kmeans_clusters",
+    "q209_ann_recall_audit",
     "q238_ivf_nprobe_plan",
     "q332_bm25_tuning_plan",
 )

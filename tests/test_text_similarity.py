@@ -472,28 +472,40 @@ def test_mmr_rerank_prefers_diverse_over_redundant(spark):
         assert by_rank[t]["mmr_score"] <= by_rank[t - 1]["mmr_score"]
 
 
-def test_semdedup_vectorized_assign_matches_exact(spark):
-    """The production (numpy-matmul) assignment must produce the same
-    clusters/verdicts as the oracle (crossJoin+window) path on data with
-    clear margins — and the exact path's N*K-shuffle cost inversion is
-    why the vectorized path exists (50k stress: K=512 149.7s exact vs
-    12.9s vectorized; see README performance notes)."""
+def test_semdedup_rounding_tie_assigns_smaller_cid(spark):
+    """Assignment compares round(cosine, 6), and a tie goes to the
+    smaller cid. Vector 100's cosines to cid 7 (0.8000000359...) and cid
+    3 (0.8000000000...) differ unrounded but agree to 6 decimals, so it
+    must land in cid 3, although cid 7 is nearer and comes first in the
+    centroid frame. Vector 101 has a clear nearest centroid, cid 9."""
     from aws_datalake_platform_spark.operators.similarity import semdedup
 
-    dim = 64
+    cents = spark.createDataFrame(
+        [(7, [0.8000001, 0.6]), (3, [0.8, 0.6]), (9, [0.0, 1.0])], "cid BIGINT, ce ARRAY<DOUBLE>"
+    )
+    emb = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (101, [0.1, 1.0])], "vec_id long, embedding array<double>"
+    )
+    out = {r["vec_id"]: r["cluster"] for r in semdedup(emb, centroids=cents).collect()}
+    assert out == {100: 3, 101: 9}
 
-    def vec(axis, eps=0.0):
-        v = [0.0] * dim
-        v[axis] = 1.0
-        v[(axis + 1) % dim] = eps
-        return v
 
-    rows = [(i, vec(i)) for i in range(8)]
-    rows += [(100, vec(3, eps=0.05)), (101, vec(9)), (102, vec(5, eps=0.03))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact = {r["vec_id"]: (r["cluster"], r["dup_of"], r["kept"])
-             for r in semdedup(emb, n_centroids=8, threshold=0.4).collect()}
-    fast = {r["vec_id"]: (r["cluster"], r["dup_of"], r["kept"])
-            for r in semdedup(emb, n_centroids=8, threshold=0.4,
-                              assign_strategy="vectorized").collect()}
-    assert fast == exact
+@pytest.mark.parametrize(
+    "bad_id, bad_vec",
+    [(42, None), (43, [1.0, 0.0]), (44, [1.0] + [None] * 63), (0, None)],
+    ids=["null", "ragged", "null_element", "null_centroid"],
+)
+def test_semdedup_rejects_dirty_vectors(spark, bad_id, bad_vec):
+    """A NULL vector, a NULL element, or a length other than the
+    centroids' has no nearest centroid: semdedup must raise a ValueError
+    naming the vec_id, not assign it somewhere. vec_id 0 is one of the
+    default seed centroids (checked on the driver); the others are
+    checked by the assignment UDF on the executor, so the ValueError
+    reaches the caller inside Spark's PythonException at the action."""
+    from aws_datalake_platform_spark.operators.similarity import semdedup
+
+    rows = [(i, [float(i == d) + 0.1 for d in range(64)]) for i in range(10) if i != bad_id]
+    emb = spark.createDataFrame(rows + [(bad_id, bad_vec)], "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match=rf"(ValueError: |^)semdedup: vec_id {bad_id} ") as e:
+        semdedup(emb, n_centroids=4, threshold=0.9).collect()
+    assert bad_id or isinstance(e.value, ValueError)
