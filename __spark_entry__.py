@@ -88,7 +88,11 @@ def _driver_checked() -> set[str]:
 # of those three is listed. Then semdedup moved onto one nearest-centroid
 # path, ivf_assign/ivf_probe_order onto one probe-rank UDF, _exact_topk
 # lost its dedup option and q47/q209 gained the PK guard: every query
-# whose build reaches one of those is listed.
+# whose build reaches one of those is listed. Then every plan-level pair
+# cosine moved onto similarity._vec_side + _pair_cosine (unrounded,
+# NULL on a zero norm) and every oracle fold onto llm_ops._dot_sql /
+# _cos_sql: every query whose build reaches a changed cosine function
+# or whose oracle text changed is listed.
 _CHANGED_AFTER_ROUND = {
     "q337_zorder_skip_estimate": 11,
     "q368_hits_hubs_authorities": 11,
@@ -127,6 +131,11 @@ _CHANGED_AFTER_ROUND = {
     "q273_knn_outlier_scores": 11,
     "q278_cluster_share_drift": 11,
     "q201_semdedup": 11,
+    "q204_semantic_decontamination": 11,
+    "q213_embedding_drift": 11,
+    "q257_rrf_hybrid_rank": 11,
+    "q308_matryoshka_audit": 11,
+    "q334_mutual_nn_pairs": 11,
 }
 
 

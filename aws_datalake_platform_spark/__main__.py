@@ -369,6 +369,22 @@ def _validate_lake(spark, sf_dir: str, show: int) -> int:
     return 1 if bad else 0
 
 
+def _section(spark, sf_dir: str, name: str):
+    """Rows of one report section's registry query, or None after a skip
+    notice. Summary queries return zero rows, or one all-NULL row (a
+    global aggregate over an empty relation), on an empty or truncated
+    lake; any NULL field breaks the section's format strings, and on a
+    real lake these rows are fully populated, so such a section is
+    skipped instead of dying on an unpack/format error."""
+    from .plans.queries import QUERY_REGISTRY
+
+    rows = QUERY_REGISTRY[name].fn(spark, sf_dir).collect()
+    if not rows or any(v is None for v in rows[0].asDict().values()):
+        print("  (no data — section skipped)\n")
+        return None
+    return rows
+
+
 def _experiment_report(spark, sf_dir: str) -> int:
     """Composite experiment readout over one events snapshot: the gate,
     the estimator, the distributional view, the robustness check, and
@@ -377,17 +393,10 @@ def _experiment_report(spark, sf_dir: str) -> int:
     degrade per-section (the quality-report discipline)."""
     from .plans.queries import QUERY_REGISTRY
 
-    def _one(name: str):
-        rows = QUERY_REGISTRY[name].fn(spark, sf_dir).collect()
-        if not rows or any(v is None for v in rows[0].asDict().values()):
-            print("  (no data — section skipped)\n")
-            return None
-        return rows
-
     print(f"# Experiment report — {sf_dir}\n")
 
     print("## Sample-ratio mismatch gate (q312: hash-assignment parity)")
-    srm = _one("q312_srm_check")
+    srm = _section(spark, sf_dir, "q312_srm_check")
     if srm is not None:
         r = srm[0]
         verdict = "SRM DETECTED — stop reading" if r["srm_detected"] else "ok"
@@ -397,7 +406,7 @@ def _experiment_report(spark, sf_dir: str) -> int:
         )
 
     print("## CUPED variance-reduced revenue (q338: arms by user parity)")
-    cuped = _one("q338_cuped_readout")
+    cuped = _section(spark, sf_dir, "q338_cuped_readout")
     if cuped is not None:
         for r in cuped:
             print(
@@ -412,7 +421,7 @@ def _experiment_report(spark, sf_dir: str) -> int:
         )
 
     print("## Quantile treatment effects (q347: per-user revenue deciles)")
-    qte = _one("q347_quantile_treatment_effect")
+    qte = _section(spark, sf_dir, "q347_quantile_treatment_effect")
     if qte is not None:
         for r in qte:
             print(
@@ -423,7 +432,7 @@ def _experiment_report(spark, sf_dir: str) -> int:
         print()
 
     print("## Permutation test (q363: 128 md5 label flips)")
-    pm = _one("q363_permutation_test")
+    pm = _section(spark, sf_dir, "q363_permutation_test")
     if pm is not None:
         r = pm[0]
         print(
@@ -433,7 +442,7 @@ def _experiment_report(spark, sf_dir: str) -> int:
         )
 
     print("## Post-stratification design effect (q360: activity deciles)")
-    de = _one("q360_poststrat_design_effect")
+    de = _section(spark, sf_dir, "q360_poststrat_design_effect")
     if de is not None:
         r = de[0]
         print(
@@ -465,19 +474,10 @@ def _forecast_report(spark, sf_dir: str) -> int:
     picks the production forecaster. Each section is an already-
     certified registry query; empty/truncated lakes degrade
     per-section (the quality-report discipline)."""
-    from .plans.queries import QUERY_REGISTRY
-
-    def _one(name: str):
-        rows = QUERY_REGISTRY[name].fn(spark, sf_dir).collect()
-        if not rows or any(v is None for v in rows[0].asDict().values()):
-            print("  (no data — section skipped)\n")
-            return None
-        return rows
-
     print(f"# Volume forecast report — {sf_dir}\n")
 
     print("## Randomness gate (q389: runs test around the median)")
-    rt = _one("q389_runs_test")
+    rt = _section(spark, sf_dir, "q389_runs_test")
     if rt is not None:
         r = rt[0]
         verdict = (
@@ -491,14 +491,14 @@ def _forecast_report(spark, sf_dir: str) -> int:
         )
 
     print("## Trend (q400 Mann-Kendall + q402 Poisson growth)")
-    mk = _one("q400_mann_kendall")
+    mk = _section(spark, sf_dir, "q400_mann_kendall")
     if mk is not None:
         r = mk[0]
         print(
             f"  tau {r['tau']:+.4f}  z {r['z_stat']:+.2f}  "
             + ("monotone trend confirmed" if r["reject_no_trend"] else "no trend")
         )
-    glm = _one("q402_poisson_trend_glm")
+    glm = _section(spark, sf_dir, "q402_poisson_trend_glm")
     if glm is not None:
         r = glm[0]
         print(
@@ -507,7 +507,7 @@ def _forecast_report(spark, sf_dir: str) -> int:
         )
 
     print("## Seasonality (q385: periodogram scan, periods 2-14d)")
-    pg = _one("q385_periodogram_scan")
+    pg = _section(spark, sf_dir, "q385_periodogram_scan")
     if pg is not None:
         dom = next(r for r in pg if r["dominant"] == 1)
         print(
@@ -516,7 +516,7 @@ def _forecast_report(spark, sf_dir: str) -> int:
         )
 
     print("## Backtest (q397: rolling one-step, shared eval days)")
-    bt = _one("q397_forecast_backtest")
+    bt = _section(spark, sf_dir, "q397_forecast_backtest")
     champion = None
     if bt is not None:
         for r in sorted(bt, key=lambda r: r["rank"]):
@@ -542,19 +542,10 @@ def _data_plan(spark, sf_dir: str) -> int:
     budget, and the split key that avoids dup leakage. Each section is
     an already-certified registry query; empty/truncated lakes degrade
     per-section (the quality-report discipline)."""
-    from .plans.queries import QUERY_REGISTRY
-
-    def _one(name: str):
-        rows = QUERY_REGISTRY[name].fn(spark, sf_dir).collect()
-        if not rows or any(v is None for v in rows[0].asDict().values()):
-            print("  (no data — section skipped)\n")
-            return None
-        return rows
-
     print(f"# Training-data plan — {sf_dir}\n")
 
     print("## Domain mixture (q419: DoReMi tilt over cross-entropy excess)")
-    mx = _one("q419_domain_mixture_plan")
+    mx = _section(spark, sf_dir, "q419_domain_mixture_plan")
     if mx is not None:
         up = [r for r in mx if r["mixture_share_pct"] > r["natural_share_pct"]]
         print(f"  {len(mx)} sources; {len(up)} upweighted")
@@ -567,7 +558,7 @@ def _data_plan(spark, sf_dir: str) -> int:
         print()
 
     print("## Target-domain selection (q414: DSIR importance weights)")
-    ds = _one("q414_dsir_importance_weights")
+    ds = _section(spark, sf_dir, "q414_dsir_importance_weights")
     if ds is not None:
         print(
             f"  top-{len(ds)} resampling candidates; best doc "
@@ -577,7 +568,7 @@ def _data_plan(spark, sf_dir: str) -> int:
         )
 
     print("## Tokenizer merge budget (q421: BPE compression curve)")
-    bp = _one("q421_bpe_compression_curve")
+    bp = _section(spark, sf_dir, "q421_bpe_compression_curve")
     if bp is not None:
         for r in bp:
             bar = "#" * int(r["compression_pct"])
@@ -595,7 +586,7 @@ def _data_plan(spark, sf_dir: str) -> int:
             print("  -> curve still steep: raise the merge budget\n")
 
     print("## Collect more data? (q429: scaling-law fit + 10x extrapolation)")
-    sl = _one("q429_scaling_law_fit")
+    sl = _section(spark, sf_dir, "q429_scaling_law_fit")
     if sl is not None:
         last = max(sl, key=lambda r: r["point"])
         print(
@@ -613,7 +604,7 @@ def _data_plan(spark, sf_dir: str) -> int:
         print(f"  predicted CE at 10x: {last['pred_ce_milli_at_10x']:.1f}  -> {verdict}\n")
 
     print("## Eval split key (q417: near-dup leakage by split scheme)")
-    lk = _one("q417_split_leakage_audit")
+    lk = _section(spark, sf_dir, "q417_split_leakage_audit")
     if lk is not None:
         by = {r["scheme"]: r for r in lk}
         d, c = by.get("by_doc"), by.get("by_cluster")
@@ -637,24 +628,12 @@ def _quality_report(spark, sf_dir: str) -> int:
     certified registry query — the CLI only sequences and formats."""
     from .plans.queries import QUERY_REGISTRY
 
-    def _one(name: str):
-        # Single-row summary queries return zero rows — or one all-NULL
-        # row (global aggregate over an empty relation) — on an empty or
-        # truncated lake; degrade to a per-section message instead of
-        # dying on an unpack/format error (ADVICE r6).
-        rows = QUERY_REGISTRY[name].fn(spark, sf_dir).collect()
-        # any NULL field breaks the section's format strings, and on a
-        # real lake these summary rows are fully populated
-        if not rows or any(v is None for v in rows[0].asDict().values()):
-            print("  (no data — section skipped)\n")
-            return None
-        return rows[0]
-
     print(f"# Corpus quality report — {sf_dir}\n")
 
     print("## Quality model discrimination (q240: ROC AUC vs rule gate)")
-    auc = _one("q240_roc_auc")
+    auc = _section(spark, sf_dir, "q240_roc_auc")
     if auc is not None:
+        auc = auc[0]
         print(
             f"  AUC {auc['auc']:.4f}  Gini {auc['gini']:.4f}  "
             f"(pos {auc['n_pos']}, neg {auc['n_neg']})\n"
@@ -669,14 +648,16 @@ def _quality_report(spark, sf_dir: str) -> int:
         )
 
     print("\n## Filter agreement (q231: rule gate vs LM filter, Cohen's kappa)")
-    k = _one("q231_quality_gate_agreement")
+    k = _section(spark, sf_dir, "q231_quality_gate_agreement")
     if k is not None:
+        k = k[0]
         cols = ", ".join(f"{c}={k[c]}" for c in k.asDict() if c != "n_docs")
         print(f"  n={k['n_docs']}  {cols}\n")
 
     print("## Source x quality independence (q245: chi-square)")
-    c2 = _one("q245_source_quality_chi2")
+    c2 = _section(spark, sf_dir, "q245_source_quality_chi2")
     if c2 is not None:
+        c2 = c2[0]
         print(
             f"  chi2 {c2['chi2']:.2f}  dof {c2['dof']}  "
             f"Cramer's V {c2['cramers_v']:.4f}\n"

@@ -52,7 +52,10 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Unrounded cosine of two array expressions, NULL when either norm
+    is zero. For when one operand is a slice or a literal; a join
+    between two frames scores with _vec_side + _pair_cosine."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def _vec_side(
@@ -70,11 +73,14 @@ def _vec_side(
 
 
 def _pair_cosine(a: str, b: str) -> Column:
-    """round(dot / (norm_a * norm_b), 6) between the _vec_side columns
-    tagged ``a`` and ``b``. Dot and each norm are sequential left-to-right
-    doubles, so the value is bit-identical to the oracles' SQL fold."""
-    return F.round(
-        dot(F.col(f"__v{a}"), F.col(f"__v{b}")) / (F.col(f"__n{a}") * F.col(f"__n{b}")), 6
+    """dot / (norm_a * norm_b) between the _vec_side columns tagged ``a``
+    and ``b``: the one pair cosine of every plan. Dot and each norm are
+    sequential left-to-right doubles, so the value is bit-identical to
+    the oracles' SQL fold (llm_ops._cos_sql). Unrounded: each caller
+    rounds (round 6 or floor to 1e-6) as its oracle does. A zero norm
+    gives NULL, the oracles' answer, not an ANSI divide-by-zero."""
+    return F.try_divide(
+        dot(F.col(f"__v{a}"), F.col(f"__v{b}")), F.col(f"__n{a}") * F.col(f"__n{b}")
     )
 
 
@@ -85,7 +91,7 @@ def _exact_topk(cands: DataFrame, k: int) -> DataFrame:
     dropped, sim is _pair_cosine, and rank orders (sim desc, neighbor_id
     asc) so ties break the same way on every engine and partitioning."""
     sims = cands.filter(F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id", "neighbor_id", _pair_cosine("q", "c").alias("sim")
+        "query_id", "neighbor_id", F.round(_pair_cosine("q", "c"), 6).alias("sim")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -137,7 +143,7 @@ def embedding_near_dup_pairs(
     b = _vec_side(base, id_col, vec_col, "vec_b", "b")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", _pair_cosine("a", "b").alias("sim"))
+        .select("vec_a", "vec_b", F.round(_pair_cosine("a", "b"), 6).alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -965,7 +971,9 @@ def semdedup(
     b = _vec_side(assign, "vec_id", "embedding", "vec_b", "b", "cluster")
     dup = (
         a.join(b, "cluster")
-        .filter((F.col("vec_b") < F.col("vec_a")) & (_pair_cosine("a", "b") >= threshold))
+        .filter(
+            (F.col("vec_b") < F.col("vec_a")) & (F.round(_pair_cosine("a", "b"), 6) >= threshold)
+        )
         .groupBy(F.col("vec_a").alias("vec_id"))
         .agg(F.min("vec_b").alias("dup_of"))
     )
@@ -1076,7 +1084,7 @@ def mmr_over_candidates(
             "query_id",
             "a_id",
             "b_id",
-            _pair_cosine("a", "b").alias("sim"),
+            F.round(_pair_cosine("a", "b"), 6).alias("sim"),
         )
         .localCheckpoint(eager=True)
     )

@@ -245,7 +245,7 @@ def _semantic_pass(
         c = _vec_side(stored, "vec_id", "embedding", "__sid", "c", "cluster")
         vs_corpus = (
             n.join(c, "cluster")
-            .filter(_pair_cosine("n", "c") >= threshold)
+            .filter(F.round(_pair_cosine("n", "c"), 6) >= threshold)
             .select("vec_id")
             .distinct()
         )

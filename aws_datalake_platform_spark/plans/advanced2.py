@@ -498,7 +498,7 @@ def _pq_sql(
     candidates. Same sequential-fold contract as the q47/q207 replays;
     assumes corpus >= n_codes rows (the operator's degenerate-corpus
     padding branch is not replayed — every gated sf is far above it)."""
-    from .llm_ops import _COS
+    from .llm_ops import _COS, _norm_sql
 
     sub = dim // m
     rng_s = f"range(1,{sub + 1})"
@@ -507,12 +507,6 @@ def _pq_sql(
         return (
             f"list_sum(list_transform({rng_s}, "
             f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-        )
-
-    def rawnorm(v: str) -> str:
-        return (
-            f"sqrt(list_sum(list_transform(range(1,{dim + 1}), "
-            f"i -> {v}[i]::DOUBLE * {v}[i]::DOUBLE)))"
         )
 
     fp = []
@@ -562,7 +556,7 @@ def _pq_sql(
     sidx AS (SELECT id, v, ROW_NUMBER() OVER (ORDER BY h, id) AS idx FROM sord),
     snv AS MATERIALIZED (
       SELECT idx, list_transform(range(1,{dim + 1}),
-               i -> v[i]::DOUBLE / greatest({rawnorm("v")}, 1e-12)) AS nv
+               i -> v[i]::DOUBLE / greatest({_norm_sql("v", dim)}, 1e-12)) AS nv
       FROM sidx
     ),
     ss AS MATERIALIZED (
@@ -578,7 +572,7 @@ def _pq_sql(
     ),{",".join(lloyd)},
     pen AS MATERIALIZED (
       SELECT vec_id, embedding, list_transform(range(1,{dim + 1}),
-               i -> embedding[i]::DOUBLE / greatest({rawnorm("embedding")}, 1e-12))
+               i -> embedding[i]::DOUBLE / greatest({_norm_sql("embedding", dim)}, 1e-12))
                  AS env
       FROM embeddings
     ),

@@ -284,18 +284,7 @@ def _kmeans_prefix_sql(
     cluster: vec_id/embedding/cluster). Composed by _ivf_sql (q47) and
     q203's cluster-profile oracle. Returns text WITHOUT the leading
     'WITH' so callers can append their own CTEs."""
-
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1,{dim + 1}), "
-            f"i -> {a}[i] * {b}[i]))"
-        )
-
-    def rawnorm(v: str) -> str:
-        return (
-            f"sqrt(list_sum(list_transform(range(1,{dim + 1}), "
-            f"i -> {v}[i]::DOUBLE * {v}[i]::DOUBLE)))"
-        )
+    from .llm_ops import _dot_sql, _norm_sql
 
     # farthest-point init: seed 1 is sample idx 1; each next seed
     # minimizes its max cosine to the seeds so far (ties -> lowest idx)
@@ -303,7 +292,7 @@ def _kmeans_prefix_sql(
     for t in range(2, n_centroids + 1):
         fp_steps.append(f"""
     sd{t} AS MATERIALIZED (SELECT nv FROM ms{t - 1} ORDER BY ms ASC, idx ASC LIMIT 1),
-    ms{t} AS MATERIALIZED (SELECT m.idx, m.nv, greatest(m.ms, {dot("m.nv", "c.nv")}) AS ms
+    ms{t} AS MATERIALIZED (SELECT m.idx, m.nv, greatest(m.ms, {_dot_sql("m.nv", "c.nv", dim)}) AS ms
               FROM ms{t - 1} m CROSS JOIN sd{t} c)""")
     seed_union = "\n      UNION ALL ".join(
         ["SELECT 0 AS cid, nv AS cv FROM sn WHERE idx = 1"]
@@ -322,7 +311,7 @@ def _kmeans_prefix_sql(
       SELECT idx, nv, cid FROM (
         SELECT s.idx, s.nv, c.cid,
                ROW_NUMBER() OVER (PARTITION BY s.idx
-                 ORDER BY {dot("s.nv", "c.cv")} DESC, c.cid) AS rn
+                 ORDER BY {_dot_sql("s.nv", "c.cv", dim)} DESC, c.cid) AS rn
         FROM sn s CROSS JOIN cents{t - 1} c) z
       WHERE rn = 1),
     newc{t} AS MATERIALIZED (
@@ -350,24 +339,24 @@ def _kmeans_prefix_sql(
     sidx AS (SELECT id, v, ROW_NUMBER() OVER (ORDER BY h, id) AS idx FROM sord),
     sn AS MATERIALIZED (
       SELECT idx, list_transform(range(1,{dim + 1}),
-               i -> v[i]::DOUBLE / greatest({rawnorm("v")}, 1e-12)) AS nv
+               i -> v[i]::DOUBLE / greatest({_norm_sql("v", dim)}, 1e-12)) AS nv
       FROM sidx
     ),
-    ms1 AS MATERIALIZED (SELECT s.idx, s.nv, {dot("s.nv", "c.nv")} AS ms
+    ms1 AS MATERIALIZED (SELECT s.idx, s.nv, {_dot_sql("s.nv", "c.nv", dim)} AS ms
             FROM sn s CROSS JOIN (SELECT nv FROM sn WHERE idx = 1) c),{",".join(fp_steps)},
     cents0 AS MATERIALIZED (
       {seed_union}
     ),{",".join(lloyd)},
     en AS MATERIALIZED (
       SELECT vec_id, embedding, list_transform(range(1,{dim + 1}),
-               i -> embedding[i]::DOUBLE / greatest({rawnorm("embedding")}, 1e-12)) AS env
+               i -> embedding[i]::DOUBLE / greatest({_norm_sql("embedding", dim)}, 1e-12)) AS env
       FROM embeddings
     ),
     cb AS MATERIALIZED (
       SELECT vec_id AS neighbor_id, embedding, cid AS cluster FROM (
         SELECT e.vec_id, e.embedding, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {dot("e.env", "c.cv")} DESC, c.cid) AS rn
+                 ORDER BY {_dot_sql("e.env", "c.cv", dim)} DESC, c.cid) AS rn
         FROM en e CROSS JOIN cents{n_iter} c) z
       WHERE rn = 1)"""
 
@@ -398,13 +387,7 @@ def _ivf_sql(
     MATERIALIZED CTEs are load-bearing: plain inlining re-expands the
     iteration chain exponentially (each step references its predecessor
     twice)."""
-    from .llm_ops import _COS
-
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1,{dim + 1}), "
-            f"i -> {a}[i] * {b}[i]))"
-        )
+    from .llm_ops import _COS, _dot_sql
 
     prefix = _kmeans_prefix_sql(n_centroids, sample_size, n_iter, seed, dim)
     cos_final = _COS.format(a="q.embedding", b="n.embedding")
@@ -414,7 +397,7 @@ def _ivf_sql(
       SELECT vec_id AS query_id, embedding, cid AS cluster FROM (
         SELECT e.vec_id, e.embedding, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {dot("e.env", "c.cv")} DESC, c.cid) AS rn
+                 ORDER BY {_dot_sql("e.env", "c.cv", dim)} DESC, c.cid) AS rn
         FROM en e CROSS JOIN cents{n_iter} c
         WHERE e.vec_id < {n_queries}) z
       WHERE rn <= {n_probe}),

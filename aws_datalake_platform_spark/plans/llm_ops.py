@@ -347,12 +347,26 @@ def q29_bag_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search over embeddings
 # ─────────────────────────────────────────────────────────────────────────────
 
-# sequential-double cosine in DuckDB, matching operators.similarity.cosine()
-_COS = (
-    "list_sum(list_transform(range(1,65), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)) "
-    "/ (sqrt(list_sum(list_transform(range(1,65), i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE))) "
-    "* sqrt(list_sum(list_transform(range(1,65), i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE))))"
-)
+def _dot_sql(a: str, b: str, dim: int = 64) -> str:
+    """Dot product of the first ``dim`` positions of two lists as a
+    sequential left-to-right sum of DOUBLE products: the rounding
+    sequence of operators.similarity.dot(). Every oracle's dot, norm and
+    cosine over embedding vectors is built from this one fold."""
+    return f"list_sum(list_transform(range(1,{dim + 1}), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
+
+
+def _norm_sql(v: str, dim: int = 64) -> str:
+    return f"sqrt({_dot_sql(v, v, dim)})"
+
+
+def _cos_sql(a: str, b: str, dim: int = 64) -> str:
+    """Unrounded cosine, bit-identical to similarity._pair_cosine; a zero
+    norm gives NULL (the oracle session runs with IEEE float ops off)."""
+    return f"{_dot_sql(a, b, dim)} / ({_norm_sql(a, dim)} * {_norm_sql(b, dim)})"
+
+
+# the 64-dim cosine as a .format template over {a} and {b}
+_COS = _cos_sql("{a}", "{b}")
 
 
 @register(
@@ -421,7 +435,7 @@ def _ndl_planes_values() -> str:
     WITH planes AS (SELECT * FROM (VALUES {_ndl_planes_values()}) pl(p, w)),
     proj AS (
       SELECT e.vec_id AS doc, pl.p AS p,
-             list_sum(list_transform(range(1, 65), i -> e.embedding[i]::DOUBLE * pl.w[i])) AS pr
+             {_dot_sql("e.embedding", "pl.w")} AS pr
       FROM embeddings e CROSS JOIN planes pl
     ),
     bits AS (
@@ -482,8 +496,7 @@ def _ann_planes_values() -> str:
     WITH planes AS (SELECT * FROM (VALUES {_ann_planes_values()}) pl(p, w)),
     buckets AS (
       SELECT e.vec_id, e.embedding,
-             CAST(SUM(CASE WHEN list_sum(list_transform(range(1, 65),
-                            i -> e.embedding[i]::DOUBLE * pl.w[i])) > 0
+             CAST(SUM(CASE WHEN {_dot_sql("e.embedding", "pl.w")} > 0
                        THEN (1 << pl.p) ELSE 0 END) AS INT) AS bucket
       FROM embeddings e CROSS JOIN planes pl
       GROUP BY e.vec_id, e.embedding

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table, load_table_pk
 from ..functions.core import round_half_up
+from .llm_ops import _cos_sql
 from .queries import register
 
 # ── q203: k-means cluster profile (the corpus-clustering readout) ───────────
@@ -82,23 +83,25 @@ def q203_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized shuffle is the final K-group aggregate."""
     import numpy as np
 
-    from ..operators.similarity import _centroid_matrix, cosine, ivf_assign
+    from ..operators.similarity import _centroid_matrix, _pair_cosine, _vec_side, ivf_assign
 
     emb = load_table_pk(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = _centroid_matrix(emb, "vec_id", "embedding", _Q203_K, n_iter=_Q203_ITER)
-    asg = ivf_assign(emb, cents, n_probe=1)
-    cdf = F.broadcast(
+    asg = _vec_side(
+        ivf_assign(emb, cents, n_probe=1),
+        "cluster", "embedding", "cluster", "e",
+    )
+    cdf = _vec_side(
         spark.createDataFrame(
             [(int(i), [float(x) for x in row]) for i, row in enumerate(cents)],
             "cluster INT, cv ARRAY<DOUBLE>",
-        )
+        ),
+        "cluster", "cv", "cluster", "c",
     )
-    q6 = F.floor(cosine(F.col("embedding"), F.col("cv")) * 1_000_000 + 0.5).cast(
-        "long"
-    )
+    q6 = F.floor(_pair_cosine("e", "c") * 1_000_000 + 0.5).cast("long")
     return (
         asg.withColumn("cluster", F.col("cluster").cast("int"))
-        .join(cdf, "cluster")
+        .join(F.broadcast(cdf), "cluster")
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_members"), F.sum(q6).alias("__s"))
         .select(
@@ -154,30 +157,21 @@ def q204_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     benchmark too large to broadcast, swap the candidate stage for the
     LSH bucket join (q59's embedding_near_dup_pairs) — same verdict
     columns."""
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import _pair_cosine, _vec_side
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # norms precomputed per SIDE before the join (README cosine-join
-    # discipline): a pair costs one sequential dot, not dot + two norms
-    # — measured 4.2 s -> ~1.5 s at sf0.1. Bitwise identical to the
-    # oracle's inline _COS (the norm expression is the same either way;
-    # q30 precedent).
-    bench = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("embedding").alias("__be"), norm(F.col("embedding")).alias("__bn")
-    )
+    bench = _vec_side(emb.filter(F.col("vec_id") % 20 == 0), "vec_id", "embedding", "__bid", "b")
     # spread per-pair HOF work across cores when the corpus arrives as
     # one parquet split (brute_force_topk's repartition idiom — values
     # are partitioning-invariant)
     n_parts = spark.sparkContext.defaultParallelism
-    train = emb.filter(F.col("vec_id") % 20 != 0).repartition(n_parts).select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("__tn")
-    )
-    sim = F.round(
-        dot(F.col("embedding"), F.col("__be")) / (F.col("__tn") * F.col("__bn")), 6
+    train = _vec_side(
+        emb.filter(F.col("vec_id") % 20 != 0).repartition(n_parts),
+        "vec_id", "embedding", "vec_id", "t",
     )
     return (
         train.crossJoin(F.broadcast(bench))
-        .select("vec_id", sim.alias("sim"))
+        .select("vec_id", F.round(_pair_cosine("t", "b"), 6).alias("sim"))
         .filter(F.col("sim") >= _Q204_T)
         .groupBy("vec_id")
         .agg(
@@ -873,7 +867,7 @@ def q212_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q213_embedding_drift",
-    """
+    f"""
     WITH ex AS (
       SELECT vec_id % 2 AS half, UNNEST(range(1,65)) AS pos,
              UNNEST(list_transform(range(1,65),
@@ -888,11 +882,7 @@ def q212_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     va AS (SELECT list(CAST(s AS DOUBLE) ORDER BY pos) AS v FROM sums WHERE half = 0),
     vb AS (SELECT list(CAST(s AS DOUBLE) ORDER BY pos) AS v FROM sums WHERE half = 1),
     cosrel AS (
-      SELECT FLOOR(
-               list_sum(list_transform(range(1,65), i -> va.v[i] * vb.v[i]))
-               / (sqrt(list_sum(list_transform(range(1,65), i -> va.v[i] * va.v[i])))
-                  * sqrt(list_sum(list_transform(range(1,65), i -> vb.v[i] * vb.v[i]))))
-               * 1000000 + 0.5) / 1000000 AS cos_shift
+      SELECT FLOOR({_cos_sql("va.v", "vb.v")} * 1000000 + 0.5) / 1000000 AS cos_shift
       FROM va CROSS JOIN vb
     ),
     diffs AS (
@@ -923,7 +913,7 @@ def q213_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-dim sums order-free, so the big aggregation needs no fold
     discipline; only the final 64-element cosine does, and it runs on
     the 2x64 aggregated relation."""
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import _pair_cosine, _vec_side
 
     emb = load_table(spark, sf_dir, "embeddings")
     ex = emb.select(
@@ -945,21 +935,10 @@ def q213_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(ps, x -> cast(x.s as double))").alias("v"),
         )
     )
-    va = vecs.filter(F.col("half") == 0).select(F.col("v").alias("__va"))
-    vb = vecs.filter(F.col("half") == 1).select(F.col("v").alias("__vb"))
-    cosrel = (
-        va.crossJoin(vb)
-        .select(
-            (
-                F.floor(
-                    dot(F.col("__va"), F.col("__vb"))
-                    / (norm(F.col("__va")) * norm(F.col("__vb")))
-                    * 1_000_000
-                    + 0.5
-                )
-                / 1_000_000
-            ).alias("cos_shift")
-        )
+    va = _vec_side(vecs.filter(F.col("half") == 0), "half", "v", "__ha", "a")
+    vb = _vec_side(vecs.filter(F.col("half") == 1), "half", "v", "__hb", "b")
+    cosrel = va.crossJoin(vb).select(
+        (F.floor(_pair_cosine("a", "b") * 1_000_000 + 0.5) / 1_000_000).alias("cos_shift")
     )
     old = sums.filter(F.col("half") == 0).select(
         "pos", F.col("s").alias("sum_old")
@@ -3171,14 +3150,12 @@ _Q238_NQ = 10
 
 def _q238_sql() -> str:
     from .extras import _kmeans_prefix_sql
-    from .llm_ops import _COS
+    from .llm_ops import _COS, _dot_sql
 
     prefix = _kmeans_prefix_sql(
         n_centroids=_Q238_NC, sample_size=1024, n_iter=10, seed=42, dim=64
     )
-    aff = (
-        "list_sum(list_transform(range(1,65), i -> e.env[i] * c.cv[i]))"
-    )
+    aff = _dot_sql("e.env", "c.cv")
     cos_final = _COS.format(a="q.embedding", b="n.embedding")
     cos_exact = _COS.format(a="qe", b="c.embedding")
     cfgs = ", ".join(f"({p})" for p in _Q238_PROBES)
@@ -3287,7 +3264,9 @@ def q238_ivf_nprobe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         qall.join(cb, "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "prank", "neighbor_id", _pair_cosine("q", "c").alias("sim"))
+        .select(
+            "query_id", "prank", "neighbor_id", F.round(_pair_cosine("q", "c"), 6).alias("sim")
+        )
     )
     cfg = spark.createDataFrame([(p,) for p in _Q238_PROBES], "p INT")
     ranked = (
@@ -5452,7 +5431,7 @@ def q257_rrf_hybrid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side cosine pass over lexical candidates; both rank windows run
     over the candidate set (docs containing a query term), not the
     corpus."""
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import _pair_cosine, _vec_side
     from .curation import _BM25_B, _BM25_K1, _BM25_TERMS
 
     docs = load_table(spark, sf_dir, "documents")
@@ -5501,22 +5480,17 @@ def q257_rrf_hybrid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int"),
     )
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    anchors = (
-        lex.filter(F.col("bm25_rank") <= _Q257_ANCHORS)
-        .join(emb, F.col("vec_id") == F.col("doc_id"))
-        .select(
-            F.col("vec_id").alias("avid"), F.col("embedding").alias("aemb")
-        )
+    anchors = _vec_side(
+        lex.filter(F.col("bm25_rank") <= _Q257_ANCHORS).join(
+            emb, F.col("vec_id") == F.col("doc_id")
+        ),
+        "vec_id", "embedding", "avid", "a",
     )
-    cand_emb = lex.select("doc_id").join(
-        emb, F.col("vec_id") == F.col("doc_id")
-    ).select("doc_id", F.col("embedding").alias("cemb"))
-    cosu = F.floor(
-        dot(F.col("aemb"), F.col("cemb"))
-        / (norm(F.col("aemb")) * norm(F.col("cemb")))
-        * 1000000
-        + 0.5
-    ).cast("long")
+    cand_emb = _vec_side(
+        lex.select("doc_id").join(emb, F.col("vec_id") == F.col("doc_id")),
+        "doc_id", "embedding", "doc_id", "c",
+    )
+    cosu = F.floor(_pair_cosine("a", "c") * 1000000 + 0.5).cast("long")
     sem = (
         cand_emb.crossJoin(F.broadcast(anchors))
         .filter(F.col("avid") != F.col("doc_id"))
@@ -7191,7 +7165,8 @@ def q273_knn_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_half_up(1 - F.col("kth_sim"), 6).alias("outlier_score"),
             F.col("kth_sim").alias("k5_cosine"),
         )
-        .orderBy(F.asc("k5_cosine"), "probe_id")
+        # a zero-norm probe has a NULL cosine: DuckDB sorts it last
+        .orderBy(F.asc_nulls_last("k5_cosine"), "probe_id")
         .limit(_Q273_TOP)
     )
 
@@ -10604,21 +10579,11 @@ _Q308_DIMS = (8, 16, 32, 64)
 _Q308_PAIRS = 256  # deterministic (2i, 2i+1) pairs from the smallest ids
 
 
-def _q308_cos(a: str, b: str, d: int) -> str:
-    """Prefix-d cosine with the same left-to-right fold the Spark side's
-    F.slice + sequential-fold cosine() performs."""
-    rng = f"range(1,{d + 1})"
-    return (
-        f"list_sum(list_transform({rng}, i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)) "
-        f"/ (sqrt(list_sum(list_transform({rng}, i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE))) "
-        f"* sqrt(list_sum(list_transform({rng}, i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE))))"
-    )
-
-
 def _q308_sql() -> str:
     rows = []
     for d in _Q308_DIMS:
-        cos_p = _q308_cos("a.embedding", "b.embedding", d)
+        # prefix-d cosine: the fold the Spark side's F.slice + cosine() performs
+        cos_p = _cos_sql("a.embedding", "b.embedding", d)
         rows.append(f"""
     SELECT {d} AS prefix_dim,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -10632,7 +10597,7 @@ def _q308_sql() -> str:
     JOIN embeddings a ON a.vec_id = p.ia
     JOIN embeddings b ON b.vec_id = p.ib
     JOIN cosf cf ON cf.ia = p.ia""")
-    cos_full = _q308_cos("a.embedding", "b.embedding", 64)
+    cos_full = _cos_sql("a.embedding", "b.embedding", 64)
     union = "\n    UNION ALL\n".join(rows)
     return f"""
     WITH ids AS (

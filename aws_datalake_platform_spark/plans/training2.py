@@ -1491,30 +1491,18 @@ def q334_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank windows partition by a sample-bounded key. At full corpus
     width, swap the exact pair stage for the LSH candidate relation —
     the mutual join is unchanged."""
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import _pair_cosine, _vec_side
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = emb.filter(F.col("vec_id") % _Q334_MOD == 0).select(
-        F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-        norm(F.col("embedding")).alias("na"),
-    )
-    b = emb.filter(F.col("vec_id") % _Q334_MOD == 1).select(
-        F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-        norm(F.col("embedding")).alias("nb"),
-    )
+    a = _vec_side(emb.filter(F.col("vec_id") % _Q334_MOD == 0), "vec_id", "embedding", "va", "a")
+    b = _vec_side(emb.filter(F.col("vec_id") % _Q334_MOD == 1), "vec_id", "embedding", "vb", "b")
     sims = (
         F.broadcast(a)
         .crossJoin(b)
         .select(
             "va",
             "vb",
-            F.floor(
-                dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-                * 1_000_000
-                + 0.5
-            )
-            .cast("long")
-            .alias("sim_u"),
+            F.floor(_pair_cosine("a", "b") * 1_000_000 + 0.5).cast("long").alias("sim_u"),
         )
     )
     wa = Window.partitionBy("va").orderBy(F.desc("sim_u"), "vb")

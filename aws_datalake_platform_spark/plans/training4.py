@@ -1969,6 +1969,7 @@ def _q426_sql() -> str:
     d = _Q426_DIM
     sc = _Q426_SCALE
     from .extras import _kmeans_prefix_sql
+    from .llm_ops import _dot_sql, _norm_sql
 
     prefix = _kmeans_prefix_sql(
         n_centroids=_Q426_CAND_K,
@@ -1978,28 +1979,16 @@ def _q426_sql() -> str:
         dim=d,
     )
 
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1,{d + 1}), "
-            f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
-        )
-
-    def nrm(v: str) -> str:
-        return (
-            f"sqrt(list_sum(list_transform(range(1,{d + 1}), "
-            f"i -> {v}[i]::DOUBLE * {v}[i]::DOUBLE)))"
-        )
-
     head = f"""
     WITH {prefix},
     pts AS MATERIALIZED (
-      SELECT vec_id AS v, embedding, {nrm("embedding")} AS nm FROM embeddings
+      SELECT vec_id AS v, embedding, {_norm_sql("embedding", d)} AS nm FROM embeddings
     ),
     rep AS MATERIALIZED (
       SELECT v AS c FROM (
         SELECT p.v, b.cluster,
                ROW_NUMBER() OVER (PARTITION BY b.cluster
-                 ORDER BY {dot("p.embedding", "ct.cv")} / p.nm DESC, p.v)
+                 ORDER BY {_dot_sql("p.embedding", "ct.cv", d)} / p.nm DESC, p.v)
                  AS rn
         FROM pts p
         JOIN cb b ON b.neighbor_id = p.v
@@ -2011,7 +2000,7 @@ def _q426_sql() -> str:
     ),
     sim AS MATERIALIZED (
       SELECT p.v, c.c,
-             CAST(FLOOR({dot("p.embedding", "c.embedding")}
+             CAST(FLOOR({_dot_sql("p.embedding", "c.embedding", d)}
                         / (p.nm * c.nm) * {sc} + 0.5) AS BIGINT) AS sq
       FROM pts p CROSS JOIN cand c
     ),

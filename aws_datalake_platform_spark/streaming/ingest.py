@@ -332,91 +332,3 @@ def stream_upsert_to_lake(
         else writer.trigger(processingTime="60 seconds")
     )
     return writer.start()
-
-
-def running_stats_transform_with_state(
-    sdf: DataFrame, key: str, value_col: str
-) -> DataFrame:
-    """Per-key running stats on the Spark 4 ``transformWithState`` API —
-    the successor to applyInPandasWithState (running_stats_with_state)
-    with typed state handles, timers, and state-schema evolution.
-
-    State: one ValueState row (n, sum, min, max) per key in RocksDB
-    (requires spark.sql.streaming.stateStore.providerClass =
-    RocksDBStateStoreProvider — changelog-checkpointed, so state size is
-    bounded by live keys, not stream length). Emits the updated stats
-    row for every key seen in each micro-batch (Update mode).
-
-    Runtime dependency: the transformWithState wire protocol needs the
-    ``protobuf`` python package (pyspark ships the generated pb2 but not
-    the runtime); this container lacks it, so the pytest is import-gated
-    — on a real cluster install protobuf alongside pyspark.
-
-    Scale: state is hash-partitioned by key across executors exactly
-    like a shuffle; per-key state is O(1) (4 doubles), so a billion-key
-    stream costs ~32 GB of RocksDB across the cluster, independent of
-    event count.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("s", DoubleType()),
-            StructField("mn", DoubleType()),
-            StructField("mx", DoubleType()),
-        ]
-    )
-    out_schema = StructType(
-        [
-            StructField(key, StringType()),
-            StructField("n", LongType()),
-            StructField("avg_value", DoubleType()),
-            StructField("min_value", DoubleType()),
-            StructField("max_value", DoubleType()),
-        ]
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            if self._agg.exists():
-                n, s, mn, mx = self._agg.get()
-            else:
-                n, s, mn, mx = 0, 0.0, float("inf"), float("-inf")
-            for pdf in rows:
-                vals = pdf[value_col]
-                n += len(vals)
-                s += float(vals.sum())
-                mn = min(mn, float(vals.min()))
-                mx = max(mx, float(vals.max()))
-            self._agg.update((n, s, mn, mx))
-            yield pd.DataFrame(
-                {
-                    key: [key_tuple[0]],
-                    "n": [n],
-                    "avg_value": [round(s / n, 4)],
-                    "min_value": [mn],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -149,6 +149,45 @@ def test_weather_end_to_end(spark, tmp_path):
     assert "temperature_f" in curated.columns
 
 
+def test_reference_catalog_serves_curated_tables(spark, tmp_path):
+    """Both transforms write a tmp lake; the four reference tables are
+    created over it (the Glue DDL role), MSCK REPAIR registers the
+    curated date partitions, and spark.sql reads the curated rows back."""
+    from aws_datalake_platform_spark.catalog import create_reference_tables, recover_partitions
+
+    lake = str(tmp_path)
+    _raw_zone(spark, f"{lake}/raw/iot-sensors", transform_iot_sensors)
+    _raw_zone(spark, f"{lake}/raw/weather", transform_weather)
+    for transform, raw, curated in [
+        (transform_iot_sensors, "raw/iot-sensors", "curated/sensor-readings"),
+        (transform_weather, "raw/weather", "curated/weather"),
+    ]:
+        assert transform(spark, f"{lake}/{raw}", f"{lake}/{curated}") is not None
+    # pre-create the database in tmp so its warehouse dir stays out of the cwd
+    spark.sql(f"CREATE DATABASE datalake LOCATION '{lake}/warehouse'")
+    try:
+        create_reference_tables(spark, lake)
+        shown = spark.sql("SHOW TABLES IN datalake").collect()
+        tables = {r["tableName"] for r in shown if not r["isTemporary"]}  # temp views list too
+        assert tables == {
+            "raw_weather", "raw_iot_sensors", "curated_weather", "curated_sensor_readings"
+        }
+        curated = ["curated_sensor_readings", "curated_weather"]
+
+        def count(table):
+            return spark.sql(f"SELECT COUNT(*) FROM datalake.{table}").first()[0]
+
+        assert [count(t) for t in curated] == [0, 0]  # no partition registered yet
+        for t in curated:
+            recover_partitions(spark, f"datalake.{t}")
+        parts = [[r[0] for r in spark.sql(f"SHOW PARTITIONS datalake.{t}").collect()] for t in curated]
+        assert parts == [["date=2026-01-01"], ["date=2026-01-05"]]
+        # 5 cities x 2 sensors x 3 ticks; one city x 24 hourly rows
+        assert [count(t) for t in curated] == [30, 24]
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS datalake CASCADE")
+
+
 def test_catalog_schema_read_no_inference(spark, tmp_path):
     """transform_iot_sensors reads with the catalog's authoritative schema
     by default: fields NOT in RAW_IOT_SENSORS are invisible (proof the

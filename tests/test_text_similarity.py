@@ -509,3 +509,82 @@ def test_semdedup_rejects_dirty_vectors(spark, bad_id, bad_vec):
     with pytest.raises(Exception, match=rf"(ValueError: |^)semdedup: vec_id {bad_id} ") as e:
         semdedup(emb, n_centroids=4, threshold=0.9).collect()
     assert bad_id or isinstance(e.value, ValueError)
+
+
+@pytest.fixture(scope="module")
+def zero_vector_lake(tmp_path_factory):
+    """sf0.001 with vec_id 20's embedding replaced by 64 zeros: a vector
+    whose norm is 0, so every cosine with it has no value."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_datalake_platform_spark.catalog import TESTDATA_TABLES
+
+    dst = tmp_path_factory.mktemp("zero_vector_lake")
+    for t in TESTDATA_TABLES:
+        shutil.copy(f"{SF_SMOKE}/{t}.parquet", dst / f"{t}.parquet")
+    emb = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    vecs = [
+        [0.0] * 64 if i == 20 else v
+        for i, v in zip(emb["vec_id"].to_pylist(), emb["embedding"].to_pylist())
+    ]
+    col = emb.schema.get_field_index("embedding")
+    emb = emb.set_column(col, "embedding", pa.array(vecs, emb.schema.field(col).type))
+    pq.write_table(emb, str(dst / "embeddings.parquet"))
+    return str(dst)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        # scored by _pair_cosine or cosine(): a zero norm is NULL, as in DuckDB
+        "q30_ann_bruteforce_topk",
+        "q31_embedding_near_dup",
+        "q47_ann_ivf_topk",
+        "q115_ann_pq_topk",
+        "q202_mmr_rerank",
+        "q203_kmeans_clusters",
+        "q204_semantic_decontamination",
+        "q209_ann_recall_audit",
+        "q238_ivf_nprobe_plan",
+        "q257_rrf_hybrid_rank",
+        "q273_knn_outlier_scores",
+        "q308_matryoshka_audit",
+        # other embedding queries that must keep matching
+        "q32_ann_lsh_topk",
+        "q59_embedding_near_dup_lsh",
+        "q213_embedding_drift",
+        "q334_mutual_nn_pairs",
+        "q411_similarity_margin",
+    ],
+)
+def test_zero_vector_matches_oracle(spark, zero_vector_lake, name):
+    """A zero embedding gives a NULL cosine on both engines; the query
+    must still hash-equal its DuckDB oracle, with the NULL sorting where
+    DuckDB sorts it (q273 ranks its k-th cosine ascending, NULL last)."""
+    from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY
+
+    from .oracle import compare, duckdb_conn
+
+    spec = QUERY_REGISTRY[name]
+    ok, msg = compare(spec.fn(spark, zero_vector_lake), duckdb_conn(zero_vector_lake), spec.sql)
+    assert ok, msg
+
+
+@pytest.mark.parametrize(
+    "name, match",
+    [
+        ("q201_semdedup", r"semdedup: vec_id 20 "),
+        # the representative score divides by norm(embedding) itself
+        ("q426_facility_location_coreset", r"DIVIDE_BY_ZERO"),
+    ],
+)
+def test_zero_vector_rejected_loudly(spark, zero_vector_lake, name, match):
+    """Queries that cannot give a zero vector a meaningful answer raise
+    rather than return rows that differ from the oracle."""
+    from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY
+
+    with pytest.raises(Exception, match=match):
+        QUERY_REGISTRY[name].fn(spark, zero_vector_lake).collect()
