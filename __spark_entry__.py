@@ -92,7 +92,10 @@ def _driver_checked() -> set[str]:
 # cosine moved onto similarity._vec_side + _pair_cosine (unrounded,
 # NULL on a zero norm) and every oracle fold onto llm_ops._dot_sql /
 # _cos_sql: every query whose build reaches a changed cosine function
-# or whose oracle text changed is listed.
+# or whose oracle text changed is listed. Then q59's LSH verify and q411
+# moved onto _pair_cosine, q426 onto a NULL score for a zero vector and
+# _hyperplane_codes onto a named NULL error: the builds that reach them
+# (q32, q59, q411, q426) are listed.
 _CHANGED_AFTER_ROUND = {
     "q337_zorder_skip_estimate": 11,
     "q368_hits_hubs_authorities": 11,

@@ -72,16 +72,21 @@ def _vec_side(
     )
 
 
-def _pair_cosine(a: str, b: str) -> Column:
-    """dot / (norm_a * norm_b) between the _vec_side columns tagged ``a``
-    and ``b``: the one pair cosine of every plan. Dot and each norm are
-    sequential left-to-right doubles, so the value is bit-identical to
-    the oracles' SQL fold (llm_ops._cos_sql). Unrounded: each caller
-    rounds (round 6 or floor to 1e-6) as its oracle does. A zero norm
-    gives NULL, the oracles' answer, not an ANSI divide-by-zero."""
-    return F.try_divide(
-        dot(F.col(f"__v{a}"), F.col(f"__v{b}")), F.col(f"__n{a}") * F.col(f"__n{b}")
+def _pair_cosine(a: str | Column, b: str | Column) -> Column:
+    """dot / (norm_a * norm_b) between two _vec_side rows: the one pair
+    cosine of every plan. Each of ``a`` and ``b`` is a _vec_side tag
+    (columns __v<tag>, __n<tag>) or a struct column with fields __v and
+    __n (a _vec_side row packed into one payload column, as
+    _verified_pairs joins it). Dot and each norm are sequential
+    left-to-right doubles, so the value is bit-identical to the oracles'
+    SQL fold (llm_ops._cos_sql). Unrounded: each caller rounds (round 6
+    or floor to 1e-6) as its oracle does. A zero norm gives NULL, the
+    oracles' answer, not an ANSI divide-by-zero."""
+    (va, na), (vb, nb) = (
+        (F.col(f"__v{s}"), F.col(f"__n{s}")) if isinstance(s, str) else (s["__v"], s["__n"])
+        for s in (a, b)
     )
+    return F.try_divide(dot(va, vb), na * nb)
 
 
 def _exact_topk(cands: DataFrame, k: int) -> DataFrame:
@@ -165,15 +170,20 @@ def _hyperplane_codes(
     """array<int> of ``bands`` sign-random-projection codes per vector: the
     signs against bands*planes_per_band md5-derived hyperplanes, packed
     planes_per_band bits per band (plane j of a band is bit j). One numpy
-    matmul per Arrow batch, map-side only."""
+    matmul per Arrow batch, map-side only. A NULL vector, or one whose
+    length is not ``dim``, raises ValueError on the executor."""
     planes = _hyperplanes(bands * planes_per_band, dim, seed)
     weights = 1 << np.arange(planes_per_band, dtype=np.int64)
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def codes(vecs: pd.Series) -> pd.Series:
+        lens = vecs.str.len()
+        if lens.isna().any():  # a missing vector has no side of any plane
+            raise ValueError("hyperplane LSH: NULL embedding")
+        if (lens != dim).any():  # a mismatched corpus would silently mis-project
+            bad = int(lens[lens != dim].iloc[0])
+            raise ValueError(f"embedding dim {bad} != configured dim {dim}")
         m = np.stack(vecs.to_numpy()).astype(np.float64)
-        if m.shape[1] != dim:  # a mismatched corpus would silently mis-project
-            raise ValueError(f"embedding dim {m.shape[1]} != configured dim {dim}")
         signs = (m @ planes.T) > 0  # (batch, bands*r)
         packed = signs.reshape(len(m), bands, planes_per_band).astype(np.int64) @ weights
         return pd.Series(list(packed.astype(np.int32)))
@@ -306,20 +316,13 @@ def embedding_near_dup_pairs_lsh(
         StorageLevel.MEMORY_AND_DISK
     )
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    # verify with the Arrow-batched sequential-fold cosine (bit-identical
-    # to the interpreted HOF form — see pair_cosine_arrow; on candidate-
-    # dense corpora like the q59 fixture this was the whole query's cost).
     # Only the codes are cached; the verify sides read the vectors from
-    # the input. Caching the vectors with the codes made q411 slower at
-    # sf0.1 in an A/B run against this shape.
-    vectors = df.repartition(n_parts).select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__p")
-    )
+    # the input (caching them with the codes made q411 slower at sf0.1),
+    # each packed with its norm so a candidate pair costs one dot product.
+    side = _vec_side(df.repartition(n_parts), id_col, vec_col, "__id", "")
+    vectors = side.select("__id", F.struct("__v", "__n").alias("__p"))
     pairs = _verified_pairs(
-        bk,
-        vectors,
-        lambda a, b: F.round(pair_cosine_arrow(a, b), 6),
-        max_bucket_size,
+        bk, vectors, lambda a, b: F.round(_pair_cosine(a, b), 6), max_bucket_size
     )
     return pairs.filter(F.col("__score") >= threshold).select(
         F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"), F.col("__score").alias("sim")
@@ -353,71 +356,6 @@ def _unit_rows(x: np.ndarray) -> np.ndarray:
     """Rows of ``x`` L2-normalized by their _seq_norms (floored at 1e-12
     so a zero row stays zero instead of NaN) — oracle-replayable."""
     return x / np.maximum(_seq_norms(x)[:, None], 1e-12)
-
-
-def pair_cosine_arrow(a_col: Column, b_col: Column) -> Column:
-    """Unrounded cosine ``dot(a,b) / (norm(a)*norm(b))`` for PAIR
-    verification, computed Arrow-batched with the strict dim-order left
-    fold (_seq_dots/_seq_norms discipline): one IEEE multiply+add per
-    dimension in dimension order, hardware (correctly-rounded) sqrt,
-    norms multiplied before the divide — the exact rounding sequence of
-    the interpreted ``cosine()`` zip_with+aggregate expression, so the
-    value is BIT-IDENTICAL while the per-pair cost drops from an
-    interpreted HOF fold (never enters whole-stage codegen; measured
-    ~4.5 s for q59's 1.27M verifies at sf0.1) to a handful of
-    vectorized numpy passes per batch (guide §4.2: hand whole batches
-    to vectorized native code).
-
-    Marked nondeterministic so the optimizer cannot duplicate the
-    evaluation below a filter on the result (guide §4.4 — the
-    threshold filter right above every verify would otherwise pay the
-    UDF twice per surviving row)."""
-
-    def _fold(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-        acc = np.zeros(len(x))
-        nx = np.zeros(len(x))
-        ny = np.zeros(len(x))
-        for d in range(x.shape[1]):
-            acc += x[:, d] * y[:, d]
-            nx += x[:, d] * x[:, d]
-            ny += y[:, d] * y[:, d]
-        return acc / (np.sqrt(nx) * np.sqrt(ny))
-
-    @pandas_udf("double")
-    def pc(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        # Dirty-data fallback (ADVICE r10): the interpreted zip_with+
-        # aggregate HOF this replaces returns NULL for a NULL vector, a
-        # length-mismatched pair (zip_with pads with NULLs) or a NULL
-        # element — np.stack would instead crash the query. The masked
-        # path only engages when such rows exist; clean batches (every
-        # production lake) take the vectorized stack unchanged.
-        try:
-            bad = a.isna().to_numpy() | b.isna().to_numpy()
-            if bad.any():
-                raise ValueError("null vectors in batch")
-            x = np.stack(a.to_numpy()).astype(np.float64)
-            y = np.stack(b.to_numpy()).astype(np.float64)
-        except (ValueError, TypeError):
-            out: list[float | None] = []
-            for va, vb in zip(a, b):
-                if (
-                    va is None
-                    or vb is None
-                    or len(va) != len(vb)
-                    or any(e is None for e in va)
-                    or any(e is None for e in vb)
-                ):
-                    out.append(None)
-                    continue
-                xa = np.asarray(va, dtype=np.float64)[None, :]
-                xb = np.asarray(vb, dtype=np.float64)[None, :]
-                out.append(float(_fold(xa, xb)[0]))
-            return pd.Series(out, dtype="Float64")
-        return pd.Series(_fold(x, y))
-
-    return pc.asNondeterministic()(a_col, b_col)
 
 
 def _seq_sqdist(x: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -911,8 +849,8 @@ def semdedup(
     precedent) into the assignment UDF's closure.
 
     Assignment is map-side: one Arrow UDF per batch returns each
-    vector's K unrounded cosines, folded in dimension order exactly like
-    ``pair_cosine_arrow`` (bit-identical to the interpreted ``cosine()``
+    vector's K unrounded cosines, folded in dimension order
+    (_seq_dots/_seq_norms: bit-identical to the interpreted ``cosine()``
     the oracle replays); Spark rounds them to 6 places and takes the
     FIRST maximum over the cid-sorted centroids, so a rounding tie goes
     to the smaller cid. No N*K-row shuffle, so cost grows with K only

@@ -4778,11 +4778,10 @@ def _q411_sql() -> str:
 )
 def q411_similarity_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: positives come from the already-bucketed q59 relation;
-    background pairs are stride equi-joins (3N); cosines are the
-    Arrow-batched sequential fold (pair_cosine_arrow — bit-identical to
-    the interpreted HOF it replaced); everything after is 21-bin
-    histogram algebra."""
-    from ..operators.similarity import pair_cosine_arrow
+    background pairs are stride equi-joins (3N); cosines are the shared
+    exact kernel (_vec_side + _pair_cosine: each norm once per row, one
+    dot per pair); everything after is 21-bin histogram algebra."""
+    from ..operators.similarity import _pair_cosine, _vec_side
     from .queries import QUERY_REGISTRY as _REGISTRY
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4803,20 +4802,12 @@ def q411_similarity_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dup.withColumn("kind", F.lit(1)).unionByName(
         bg.withColumn("kind", F.lit(0))
     )
-    ea = emb.select(F.col("vec_id").alias("va"), F.col("embedding").alias("emb_a"))
-    eb = emb.select(F.col("vec_id").alias("vb"), F.col("embedding").alias("emb_b"))
+    ea = _vec_side(emb, "vec_id", "embedding", "va", "a")
+    eb = _vec_side(emb, "vec_id", "embedding", "vb", "b")
     sims = (
         pairs.join(ea, "va")
         .join(eb, "vb")
-        .select(
-            "kind",
-            # Arrow-batched sequential-fold cosine — bit-identical to the
-            # interpreted cosine() HOF (pair_cosine_arrow), ~10x less
-            # per-pair overhead on the 3N+dup pair relation
-            F.floor((pair_cosine_arrow(F.col("emb_a"), F.col("emb_b")) + 1) * 10)
-            .cast("long")
-            .alias("bin"),
-        )
+        .select("kind", F.floor((_pair_cosine("a", "b") + 1) * 10).cast("long").alias("bin"))
     )
     hist = sims.groupBy("bin").agg(
         F.sum("kind").cast("long").alias("cd"),

@@ -2121,16 +2121,16 @@ def q426_facility_location_coreset(spark: SparkSession, sf_dir: str) -> DataFram
     # its centroid (dot/|emb|; cv is unit), ties -> lowest vec_id. The
     # struct-max (score, -vec_id) is a map-side-combinable aggregate —
     # no corpus-wide window. Same rounding path as the oracle's
-    # ROW_NUMBER ... ORDER BY dot/nm DESC, v.
+    # ROW_NUMBER ... ORDER BY dot/nm DESC, v; a zero vector scores NULL,
+    # which the max ranks below every score, as the oracle ranks it last.
     rep = (
         ivf_assign(raw, cents)
         .join(F.broadcast(cdf), "cluster")
         .select(
             "cluster",
             "vec_id",
-            (
-                dot(F.col("embedding"), F.col("cv"))
-                / norm(F.col("embedding"))
+            F.try_divide(
+                dot(F.col("embedding"), F.col("cv")), norm(F.col("embedding"))
             ).alias("score"),
         )
         .groupBy("cluster")
@@ -2161,6 +2161,8 @@ def q426_facility_location_coreset(spark: SparkSession, sf_dir: str) -> DataFram
     # the same strict dim-order fold (_seq_dots/_seq_norms), hardware
     # sqrt, norms multiplied before the divide, then the identical
     # FLOOR(cos * sc + 0.5) — bit-identical sq cells by construction.
+    # A cell whose norm product is zero is the oracle's NULL sq, which
+    # its GREATEST/COALESCE algebra treats like an absent cell: not emitted.
     from ..operators.similarity import _seq_dots, _seq_norms
 
     d = cmat.shape[1] if cmat.size else 0
@@ -2170,14 +2172,14 @@ def q426_facility_location_coreset(spark: SparkSession, sf_dir: str) -> DataFram
         cn = _seq_norms(cmat) if k_cand else np.zeros(0)
 
         def emit(ids_arr, x):
-            dots = _seq_dots(x, cmat)
-            cos = dots / (_seq_norms(x)[:, None] * cn[None, :])
-            sq = np.floor(cos * sc + 0.5).astype(np.int64)
+            nn = _seq_norms(x)[:, None] * cn[None, :]
+            ok = nn != 0
+            cos = _seq_dots(x, cmat)[ok] / nn[ok]
             return pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(ids_arr, k_cand), pa.int64()),
-                    pa.array(np.tile(c_ids, len(ids_arr)), pa.int64()),
-                    pa.array(sq.ravel(), pa.int64()),
+                    pa.array(np.repeat(ids_arr, k_cand)[ok.ravel()], pa.int64()),
+                    pa.array(np.tile(c_ids, len(ids_arr))[ok.ravel()], pa.int64()),
+                    pa.array(np.floor(cos * sc + 0.5).astype(np.int64), pa.int64()),
                 ],
                 names=["v", "c", "sq"],
             )
