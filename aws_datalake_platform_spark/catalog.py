@@ -103,10 +103,91 @@ def ensure_nanos_as_long(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+# Session confs that change what parquet schema inference returns
+# (ParquetToSparkSchemaConverter and the footer merge in Spark 4.1). They
+# are part of the schema memo's key, so a session that reads the same
+# files under different settings infers its own schema.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.caseSensitive",
+)
+
+# (abspath, inference confs) -> (_lake_fingerprint, schema) of the last
+# parquet schema inferred there this process: the Glue catalog's role in
+# the reference, a table's schema held once, not re-derived per query.
+# Inference is a Spark job reading a footer (70-95 ms per load on a
+# 4-vCPU host); a read given the schema launches none. One entry per
+# path, so rewriting a table replaces its entry instead of adding one.
+# Threads loading the same new table may both infer; both store the
+# same schema.
+_SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _lake_fingerprint(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file at or under ``path``,
+    in name order: equal fingerprints mean an unchanged file set, so a
+    table rewritten in place gets a new one. None when the path cannot be
+    listed locally (a remote URI, a missing path): nothing is memoized
+    for it."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs.sort()
+            for n in sorted(names):
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(files)
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, tuple | None]:
+    """``spark.read.parquet(path)`` that infers the schema on the first read
+    of a file set and passes it on later ones. Only a read that succeeded
+    is memoized. Returns the frame and the path's fingerprint."""
+    fingerprint = _lake_fingerprint(path)
+    if fingerprint is None:
+        return spark.read.parquet(path), None
+    key = (os.path.abspath(path), tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS))
+    known = _SCHEMAS.get(key)
+    if known is not None and known[0] == fingerprint:
+        return spark.read.schema(known[1]).parquet(path), fingerprint
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df, fingerprint
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, tuple | None]:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        ensure_nanos_as_long(spark)
+    df, fingerprint = _read_parquet(spark, path)
+    if name == "events":
+        dt = dict(df.dtypes).get("ts")
+        if dt == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif dt == "timestamp_ntz":
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df, fingerprint
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan; Catalyst handles column pruning + predicate
     pushdown, so callers should filter/select on the returned DataFrame
-    rather than materializing it.
+    rather than materializing it. The schema is inferred on the first
+    load of a file set and reused after (``_read_parquet``).
 
     The events table's ``ts`` has shipped in three parquet flavors across
     driver testdata generations: TIMESTAMP(NANOS) (read as bigint nanos
@@ -116,17 +197,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     with the session timezone pinned to UTC the NTZ→LTZ cast is an
     identity on the wall-clock values the oracle compares.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        ensure_nanos_as_long(spark)
-        df = spark.read.parquet(path)
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dt == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return _load(spark, sf_dir, name)[0]
 
 
 # Lake-contract primary keys (the reference's Glue DDL treats these id
@@ -148,11 +219,11 @@ TABLE_PRIMARY_KEYS = {
     # it — validate-lake reports it as info only.
 }
 
-# (abspath(sf_dir), table, key) triples already verified this process.
-# Lake paths are immutable within a run (batch contract), so one loud
-# one-aggregate check per lake+table amortizes to zero across the
-# bench's warm passes and repeated query invocations.
-_PK_VERIFIED: set[tuple[str, str, str]] = set()
+# (abspath(sf_dir), table, key, _lake_fingerprint) already verified this
+# process. One loud one-aggregate check per unchanged file set amortizes
+# to zero across the bench's warm passes and repeated query invocations;
+# a table rewritten in place has a new fingerprint and is checked again.
+_PK_VERIFIED: set[tuple[str, str, str, tuple | None]] = set()
 
 
 def load_table_pk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -166,14 +237,14 @@ def load_table_pk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     q209, load their keyed table through this wrapper so such input
     raises ``DuplicateKeyError`` instead of silently returning different
     numbers. One extra count/count-distinct
-    aggregate per (lake, table) per process (cached; column-pruned scan
-    of just the key column).
+    aggregate per unchanged table file set per process (cached;
+    column-pruned scan of just the key column).
     """
     from .validation import require_unique_key
 
-    df = load_table(spark, sf_dir, name)
+    df, fingerprint = _load(spark, sf_dir, name)
     key = TABLE_PRIMARY_KEYS[name]
-    token = (os.path.abspath(sf_dir), name, key)
+    token = (os.path.abspath(sf_dir), name, key, fingerprint)
     if token not in _PK_VERIFIED:
         require_unique_key(df.select(key), key, name)
         _PK_VERIFIED.add(token)

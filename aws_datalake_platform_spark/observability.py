@@ -219,3 +219,12 @@ def wrap_pipeline(
     if rec["status"] == "failed":
         return {"success": False, "job_metrics": rec}
     return None if result is None else {**result, "job_metrics": rec}
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this driver JVM so far
+    (``CodegenMetrics.METRIC_COMPILATION_TIME``'s sample count). The delta
+    over a call is its codegen-cache misses: a warm call that still
+    compiles is not warm."""
+    jvm = spark.sparkContext._jvm
+    return int(jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())

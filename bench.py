@@ -21,6 +21,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from aws_datalake_platform_spark.observability import codegen_compiles  # noqa: E402
 from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY  # noqa: E402
 from aws_datalake_platform_spark.session import get_spark  # noqa: E402
 
@@ -376,15 +377,18 @@ def materialize(df) -> int:
     return df.count()
 
 
-def timed_pass(spark, build, materialize=materialize) -> float:
+def timed_pass(spark, build, materialize=materialize) -> tuple[float, int]:
     """One timed pass, shared by every timing loop here and by
     scripts/qtime.py: clearCache, drain(), then the wall seconds to run
-    ``build()`` and materialize the frame it returns."""
+    ``build()`` and materialize the frame it returns, and the number of
+    generated classes Janino compiled meanwhile (a warm pass compiles
+    none; one that does is still paying codegen)."""
     spark.catalog.clearCache()
     drain(spark)
+    c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     materialize(build())
-    return time.perf_counter() - t0
+    return time.perf_counter() - t0, codegen_compiles(spark) - c0
 
 
 # warm at the TARGET sf: AQE picks different physical plans (broadcast vs
@@ -438,13 +442,15 @@ def main() -> None:
     # warm-steady-state framing is visible in the artifact itself.
     timings: dict[str, float] = {}
     passes: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
 
     def time_query(name: str) -> None:
         spec = QUERY_REGISTRY.get(name)
         if spec is None:
             return
-        elapsed = timed_pass(spark, lambda: spec.fn(spark, SF_DIR))
+        elapsed, n_compiled = timed_pass(spark, lambda: spec.fn(spark, SF_DIR))
         passes.setdefault(name, []).append(round(elapsed, 3))
+        compiles.setdefault(name, []).append(n_compiled)
         timings[name] = round(min(elapsed, timings.get(name, elapsed)), 3)
 
     for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))):
@@ -493,7 +499,7 @@ def main() -> None:
             for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))):
                 for name, fn in FROM_INDEX_AUDITS.items():
                     key = f"{name}_from_index"
-                    elapsed = round(timed_pass(spark, lambda: fn(spark, SF_DIR, index_dir)), 3)
+                    elapsed = round(timed_pass(spark, lambda: fn(spark, SF_DIR, index_dir))[0], 3)
                     from_index[key] = min(elapsed, from_index.get(key, elapsed))
         finally:
             shutil.rmtree(index_dir, ignore_errors=True)
@@ -550,9 +556,11 @@ def main() -> None:
             geomean_vs_first_run = _geomean(timings, prev)
             fresh_total = round(sum(timings.values()), 3)
             prev_passes = prev_full.get("passes", {})
+            prev_compiles = prev_full.get("compiles", {})
             for q in timings:
                 timings[q] = min(timings[q], prev[q])
                 passes[q] = prev_passes.get(q, []) + passes[q]
+                compiles[q] = prev_compiles.get(q, []) + compiles[q]
             for q, sec in prev_full.get("from_index", {}).get(
                 "audits", {}
             ).items():
@@ -595,9 +603,11 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "passes": passes,
+        "compiles": compiles,
         "timing": "per-query min across warm passes (cache cleared "
         "before each timed query; warmup pass excluded; sub-second "
-        "rows get extra interleaved passes — see 'passes')",
+        "rows get extra interleaved passes — see 'passes'; 'compiles' "
+        "holds each pass's Janino compile count, 0 on a warm pass)",
         "sf": sf_val,
         "geomean_vs_prev": geomean_vs_prev,
         "geomean_vs_first_run": geomean_vs_first_run,

@@ -11,7 +11,9 @@ to a file so plan claims are auditable:
         [--explain-suffix after] [--plan-only]
 
 Timing methodology matches bench.py (count() materialization) so the
-numbers are directly comparable to bench_full.json rows.
+numbers are directly comparable to bench_full.json rows. Each pass also
+reports how many generated classes it compiled: a "warm" pass that still
+compiles is paying codegen, not running the query.
 """
 
 from __future__ import annotations
@@ -70,12 +72,14 @@ def main() -> int:
             continue
         spark.sparkContext.setJobDescription(f"warmup {name}")
         materialize(spec.fn(spark, args.sf))  # warmup (codegen/JIT)
-        runs = []
+        runs, compiles = [], []
         for i in range(args.passes):
             spark.sparkContext.setJobDescription(f"{name} pass {i}")
-            runs.append(round(timed_pass(spark, lambda: spec.fn(spark, args.sf), materialize), 3))
-        results[name] = {"min": min(runs), "runs": runs}
-        print(f"{name:45s} min={min(runs):7.3f}  runs={runs}", flush=True)
+            elapsed, n_compiled = timed_pass(spark, lambda: spec.fn(spark, args.sf), materialize)
+            runs.append(round(elapsed, 3))
+            compiles.append(n_compiled)
+        results[name] = {"min": min(runs), "runs": runs, "compiles": compiles}
+        print(f"{name:45s} min={min(runs):7.3f}  runs={runs}  compiles={compiles}", flush=True)
 
     print(json.dumps(results))
     spark.stop()

@@ -114,6 +114,17 @@ def test_guard_passes_and_caches_on_valid_lake(spark):
     assert _PK_VERIFIED == before
 
 
+def test_guard_rechecks_a_table_rewritten_in_place(spark, tmp_path):
+    lake = _write_lake(tmp_path, rows=3, repeat=1)
+    assert load_table_pk(spark, lake, "embeddings").count() == 3
+    # same path, one vec_id repeated: the verified token must not cover it
+    path = tmp_path / "embeddings.parquet"
+    clean = pq.read_table(str(path))
+    pq.write_table(pa.concat_tables([clean, clean.slice(0, 1)]), str(path))
+    with pytest.raises(DuplicateKeyError, match=r"embeddings\.vec_id"):
+        load_table_pk(spark, lake, "embeddings")
+
+
 def test_validate_lake_cli(spark, dup_lake, capsys):
     from aws_datalake_platform_spark.__main__ import main
 
