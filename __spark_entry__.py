@@ -95,7 +95,11 @@ def _driver_checked() -> set[str]:
 # or whose oracle text changed is listed. Then q59's LSH verify and q411
 # moved onto _pair_cosine, q426 onto a NULL score for a zero vector and
 # _hyperplane_codes onto a named NULL error: the builds that reach them
-# (q32, q59, q411, q426) are listed.
+# (q32, q59, q411, q426) are listed. Then every in-call persist/unpersist
+# pair became a localCheckpoint and q368/q382/q393/q394 moved onto one
+# customer-part edge loader (plans.purchase_graph): the builds that reach
+# connected_components, embedding_near_dup_pairs_lsh, the edge loader or
+# a converted graph query are listed.
 _CHANGED_AFTER_ROUND = {
     "q337_zorder_skip_estimate": 11,
     "q368_hits_hubs_authorities": 11,
@@ -139,6 +143,9 @@ _CHANGED_AFTER_ROUND = {
     "q257_rrf_hybrid_rank": 11,
     "q308_matryoshka_audit": 11,
     "q334_mutual_nn_pairs": 11,
+    "q123_pagerank_transitions": 11,
+    "q381_textrank_keywords": 11,
+    "q393_degree_assortativity": 11,
 }
 
 

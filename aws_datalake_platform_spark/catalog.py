@@ -156,7 +156,10 @@ def _lake_fingerprint(path: str) -> tuple | None:
 def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, tuple | None]:
     """``spark.read.parquet(path)`` that infers the schema on the first read
     of a file set and passes it on later ones. Only a read that succeeded
-    is memoized. Returns the frame and the path's fingerprint."""
+    is memoized. A file set rewritten since its last read is refreshed
+    first: Spark would otherwise serve relations cached from the old files
+    (the LSH detectors' features) to plans over the new ones. Returns the
+    frame and the path's fingerprint."""
     fingerprint = _lake_fingerprint(path)
     if fingerprint is None:
         return spark.read.parquet(path), None
@@ -164,6 +167,8 @@ def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, tuple | No
     known = _SCHEMAS.get(key)
     if known is not None and known[0] == fingerprint:
         return spark.read.schema(known[1]).parquet(path), fingerprint
+    if known is not None:
+        spark.catalog.refreshByPath(path)
     df = spark.read.parquet(path)
     _SCHEMAS[key] = (fingerprint, df.schema)
     return df, fingerprint

@@ -449,8 +449,10 @@ def minhash_lsh_pairs(
     sides and the score go through _verified_pairs, the tail SimHash and
     embedding LSH share.
 
-    The persisted base relation is scoped to this plan; Spark evicts it
-    LRU (or call spark.catalog.clearCache() between unrelated workloads).
+    The persisted base relation stays cached after the call, so a repeat
+    call on an unchanged table reuses it; load_table refreshes it when
+    the table is rewritten in place. A derived ``df`` (not a table read)
+    caches a new base per call that nothing releases.
     """
     base = minhash_doc_features(df, id_col, text_col, k, num_hashes, bands).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -555,7 +557,9 @@ def simhash_near_dup_pairs(
     self-join: both join branches hang off it, and without the persist the
     Arrow signature pass (the only stage touching text) executes once PER
     BRANCH — profiled 2x at sf0.1, same lesson as the MinHash base
-    (minhash_lsh_pairs above).
+    (minhash_lsh_pairs above). Like that base, the signatures stay cached
+    after the call, so a repeat call on an unchanged table reuses them;
+    load_table refreshes them when the table is rewritten in place.
     """
     sig = simhash_signatures(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
     sig.count()
@@ -661,16 +665,16 @@ def connected_components(
     ``max_iter`` as the pathological-chain guard.
 
     Scale: each round is one equi-join (labels x edges, both hash-
-    partitioned on the key) + one min-aggregate; labels persist
-    MEMORY_AND_DISK between rounds and the previous round unpersists, so
-    peak footprint is two label sets + the (narrow) edge list. The
-    convergence check rides the same aggregate (one count per round). At
+    partitioned on the key) + one min-aggregate; each round's labels are
+    localCheckpoint'ed, and the ContextCleaner releases earlier rounds'
+    once nothing references them. The convergence check rides the same
+    aggregate and materializes the checkpoint (one count per round). At
     very large diameters you'd switch to alternating large/small-star
     (Kiveris et al.) — same join primitive, O(log n) rounds.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
+    sym = sym.localCheckpoint(eager=False)
     # Small-graph collapse: dedup edge lists are usually TINY relative
     # to the corpus (sf0.1 profile: 256 edges from 5,000 docs, yet the
     # 32-partition propagation rounds cost 4.6 s of pure task-scheduling
@@ -681,16 +685,15 @@ def connected_components(
     # oracle's recursive-CTE transitive-closure semantics (least(a, min
     # reachable)), with none of the per-round join/aggregate/count jobs
     # (guide §8: decide with small rows; the per-round loop was 8-12
-    # Spark jobs over kilobytes). The count is on the already-persisted
-    # relation (no extra pass over the corpus); big graphs keep the
+    # Spark jobs over kilobytes). The count materializes the checkpoint
+    # (no extra pass over the corpus); big graphs keep the
     # partitioned propagation loop below, whose per-round cost is what
     # actually scales to 100 TB. The budget here is tighter than the
     # global one (200k pairs x 16 B): the driver side is pure-Python
     # union-find, and nobody has measured it above 200k pairs.
     if fits_on_driver("connected_components", (sym.count(), 2), budget=200_000 * 16):
-        # read from the persisted relation (never the upstream lineage)
+        # read from the checkpoint (never the upstream lineage)
         pair_rows = sym.collect()  # bounded by the guard above
-        sym.unpersist()
         parent: dict = {}
 
         def find(x):
@@ -733,10 +736,9 @@ def connected_components(
         return edges.sparkSession.createDataFrame(out_rows, schema)
     labels = (
         sym.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
 
     comp_type = labels.schema["comp"].dataType
-    cached = labels  # the currently-persisted relation to release each round
     for _ in range(max_iter):
         nbr = (
             sym.join(labels.withColumnRenamed("node", "b"), "b")
@@ -751,15 +753,12 @@ def connected_components(
             .union(nbr.withColumn("__old", F.lit(None).cast(comp_type)))
             .groupBy("node")
             .agg(F.min("comp").alias("comp"), F.min("__old").alias("__old"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).localCheckpoint(eager=False)
         changed = merged.filter(F.col("comp") < F.col("__old")).count()
-        cached.unpersist()
-        cached = merged
         labels = merged.select("node", "comp")
         if changed == 0:
             break
-    sym.unpersist()
-    return labels.select("node", "comp")
+    return labels
 
 
 def dup_clusters(pairs: DataFrame) -> DataFrame:

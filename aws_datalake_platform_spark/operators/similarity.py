@@ -301,16 +301,16 @@ def embedding_near_dup_pairs_lsh(
     Scale: bucketing is map-side (one matmul per Arrow batch); the only
     shuffles are the bucket groupBy/join on (band, bucket) and the two
     candidate->vector hash joins — cost is O(N*b) + sum of capped bucket
-    fan-outs, never N^2.
+    fan-outs, never N^2. The persisted band codes stay cached after the
+    call, so a repeat call on an unchanged table reuses them; load_table
+    refreshes them when the table is rewritten in place.
     """
     if bands is None or planes_per_band is None:
-        # Persist before the sizing count: the bucketing pass AND the
+        # Checkpoint before the sizing count: the bucketing pass AND the
         # verify branch below both re-read the input, which would
         # otherwise recompute the upstream lineage per consumer on
-        # exactly the large-corpus path auto-sizing targets. Stays
-        # cached under the session's LRU (same contract as the MinHash
-        # base; clearCache between unrelated workloads).
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        # exactly the large-corpus path auto-sizing targets.
+        df = df.localCheckpoint(eager=False)
         bands, planes_per_band = lsh_band_params(df.count(), threshold)
     bk = banded_lsh_buckets(df, id_col, vec_col, bands, planes_per_band, seed, dim).persist(
         StorageLevel.MEMORY_AND_DISK

@@ -31,7 +31,7 @@ hand-off artifact a training run needs to build its data loader mix.
 Downstream steps (chunking q87, sequence packing q114) run over the
 curated snapshot — they change row shape, so they belong after the
 keep/drop decisions this pipeline makes. Stages are lazy column logic
-over one growing plan; the scored relation is persisted once so the
+over one growing plan; the scored relation is checkpointed once so the
 funnel counts (plain actions, reported in the result dict) read cached
 data instead of re-running the dedup join per count.
 """
@@ -106,10 +106,7 @@ def curate_corpus(
     # duplicate-heavy corpus is quadratic in the duplicates, so this
     # stage only ever runs on the deduped residual, where it is cheap.
     # Drops the SHORTER side (doc_a, the contained doc) of each pair.
-    swallowed_cached = None
     if containment_threshold is not None:
-        from pyspark import StorageLevel as _SL
-
         from ..operators.dedup import (
             shingle_containment_pairs_prefix as shingle_containment_pairs,
         )
@@ -132,8 +129,8 @@ def curate_corpus(
             F.col("doc_a").alias("doc_b"), F.col("doc_b").alias("doc_a")
         )
         mutual = pairs.join(rev, ["doc_a", "doc_b"], "left_semi")
-        oneway = pairs.join(rev, ["doc_a", "doc_b"], "left_anti").persist(
-            _SL.MEMORY_AND_DISK
+        oneway = pairs.join(rev, ["doc_a", "doc_b"], "left_anti").localCheckpoint(
+            eager=True
         )
         # fixpoint on the (small) pair relation only — corpus text is
         # never touched; each step is one anti-join + distinct. Start
@@ -143,7 +140,7 @@ def curate_corpus(
         # longest-chain steps; the cap is a safety net, and on a
         # non-converged cap the INTERSECTION of the last two iterates is
         # used — erring toward keeping docs, never losing content.
-        drops = oneway.select("doc_a").distinct().persist(_SL.MEMORY_AND_DISK)
+        drops = oneway.select("doc_a").distinct().localCheckpoint(eager=True)
         prev = None
         converged = False
         for _ in range(25):
@@ -152,41 +149,30 @@ def curate_corpus(
                 oneway.join(dropped_hosts, "doc_b", "left_anti")
                 .select("doc_a")
                 .distinct()
-                .persist(_SL.MEMORY_AND_DISK)
+                .localCheckpoint(eager=False)
             )
             changed = (
                 new_drops.join(drops, "doc_a", "left_anti").count()
                 + drops.join(new_drops, "doc_a", "left_anti").count()
             )
             if changed == 0:
-                new_drops.unpersist()
                 converged = True
                 break
-            if prev is not None:
-                prev.unpersist()
             prev, drops = drops, new_drops
-        last_iterate = drops
         if not converged and prev is not None:
             drops = drops.join(prev, "doc_a", "left_semi")
-        # persist the ID LIST, not the residual rows: every downstream
+        # checkpoint the ID LIST, not the residual rows: every downstream
         # action re-executes this anti-join's build side, and the
         # containment self-join behind it is the most expensive subtree
         # in the pipeline. A bigint id list is bounded by the residual
         # count; the earlier full-row residual cache is documented below.
-        swallowed_cached = (
+        swallowed = (
             drops.union(mutual.filter(F.col("doc_a") > F.col("doc_b")).select("doc_a"))
             .select(F.col("doc_a").alias("doc_id"))
             .distinct()
-            .persist(_SL.MEMORY_AND_DISK)
+            .localCheckpoint(eager=True)
         )
-        # materialize the id list EAGERLY so the fixpoint scaffolding can
-        # be unpersisted now (ADVICE r5: prev/oneway/drops caches were
-        # accumulating across the long pipeline otherwise)
-        swallowed_cached.count()
-        for scaffold in (last_iterate, prev, oneway):
-            if scaffold is not None:
-                scaffold.unpersist()
-        deduped = deduped.join(swallowed_cached, "doc_id", "left_anti")
+        deduped = deduped.join(swallowed, "doc_id", "left_anti")
 
     # 1d. optional SEMANTIC dedup (SemDeDup, q201) — the production
     # configuration the oracle path can't exercise: learned k-means
@@ -221,8 +207,8 @@ def curate_corpus(
     # NOTE on (non-)caching: the heavy near-dup subtree is already
     # materialized exactly once — connected_components runs its loop
     # EAGERLY (per-round convergence counts) and leaves the final label
-    # relation persisted, so every downstream consumer of `losers`
-    # reads that cache; only the cheap exact-dedup join re-executes per
+    # relation checkpointed, so every downstream consumer of `losers`
+    # reads that checkpoint; only the cheap exact-dedup join re-executes per
     # action. An experiment that additionally persisted the full
     # `deduped` residual OOM'd the 52k full-stack funnel twice (16g and
     # 32g driver heap, local mode) without improving wall time, so the
@@ -267,16 +253,18 @@ def curate_corpus(
         + 0.1 * (n_word_chars / n_words)
     )
     # scored feeds a count, the quality filter, decontamination, AND the
-    # final projection — persist it once or every funnel count re-runs
+    # final projection — checkpoint it once or every funnel count re-runs
     # dedup + scoring from the scan (measured 13.2 s -> 10.7 s at sf0.1; the remaining cost is the real work — dedup join, contamination join, snapshot write)
-    from pyspark import StorageLevel
-
     scored = (
         deduped.filter(F.length(F.trim(F.col("text"))) > 0)
         .withColumn("quality_score", F.round(1.0 / (1.0 + F.exp(-z)), 4))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
+    # empty-text rows are dropped pre-scoring, so this is the post-dedup
+    # usable count
+    n_dedup = scored.count()
     quality = scored.filter(F.col("quality_score") >= quality_threshold)
+    n_quality = quality.count()
 
     # 3. decontamination: drop anything sharing a 5-gram with the
     # held-out benchmark slice (doc_id % bench_modulus == 0)
@@ -285,17 +273,16 @@ def curate_corpus(
     contaminated = contamination_pairs(
         candidates, bench, "doc_id", "text", k=5, min_shared=1
     ).select("doc_id").distinct()
-    clean = candidates.join(contaminated, "doc_id", "left_anti")
+    # checkpointed before anything is built on it: only frames derived
+    # from the returned object read the checkpoint
+    clean = candidates.join(contaminated, "doc_id", "left_anti").localCheckpoint(
+        eager=False
+    )
+    n_clean = clean.count()
 
     # 4. mixture sampling (deterministic hash threshold per language)
     mix = mixture or {"en": 1.0, "es": 1.0, "fr": 1.0, "de": 1.0, "zh": 1.0}
     sampled = stratified_sample(clean, "doc_id", "lang", mix, seed=seed)
-
-    n_dedup = scored.count()  # materializes the persist; empty-text rows
-    # are dropped pre-scoring, so this is the post-dedup usable count
-    n_quality = quality.count()
-    clean = clean.persist(StorageLevel.MEMORY_AND_DISK)
-    n_clean = clean.count()
     curated = sampled.select(
         "doc_id", "text", "lang", "source", "n_chars", "quality_score"
     )
@@ -332,8 +319,4 @@ def curate_corpus(
         from ..operators.snapshots import write_snapshot
 
         result["snapshot_version"] = write_snapshot(curated, out_path)
-    scored.unpersist()
-    clean.unpersist()
-    if swallowed_cached is not None:
-        swallowed_cached.unpersist()
     return result

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..catalog import load_table, load_table_pk
 from .queries import register
@@ -989,7 +988,7 @@ def q123_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration itself runs on the NODE set, which for any real taxonomy
     is tiny — each step is one co-partitioned join + aggregate, and at
     graph scale this exact loop is connected_components' shape
-    (persist + localCheckpoint cadence, operators/dedup.py:560)."""
+    (localCheckpoint cadence, operators/dedup.py)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
@@ -1004,7 +1003,7 @@ def q123_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         edges.join(outd, "prev")
         .select("prev", "cur", (F.col("w") * 1.0 / F.col("od")).alias("p"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
     # localCheckpoint the node set (q398 cadence): every one of the 10
     # iteration steps left-joins nodes, so without materialization the
@@ -1016,7 +1015,6 @@ def q123_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = nodes.count()
     if n == 0:  # empty lake: schema-stable empty result
-        e.unpersist()
         return spark.createDataFrame([], "v string, pagerank double")
     ranks = nodes.select("v", F.lit(1.0 / n).alias("r"))
     for _ in range(_PR_ITERS):
@@ -1028,11 +1026,9 @@ def q123_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks = nodes.join(contrib, nodes["v"] == contrib["cur"], "left").select(
             "v", (F.lit((1 - _PR_DAMP) / n) + _PR_DAMP * F.coalesce("c", F.lit(0.0))).alias("r")
         )
-    # Materialize before unpersisting so the returned plan does not embed
-    # ten copies of the edge-mining subtree (VERDICT r2 item 2).
-    out = ranks.select("v", F.round("r", 6).alias("pagerank")).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    # Materialize so the returned plan does not embed ten copies of the
+    # iteration subtree (VERDICT r2 item 2).
+    return ranks.select("v", F.round("r", 6).alias("pagerank")).localCheckpoint(eager=True)
 
 
 # ── q124: train/val/test split assignment ───────────────────────────────────

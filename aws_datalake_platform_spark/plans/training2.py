@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table, load_table_pk
 from ..functions.core import fits_on_driver, round_half_up
+from .purchase_graph import checkpointed_edges
 from .queries import register
 
 # ── q323: Chao1 / Good-Turing vocabulary-richness estimation ────────────────
@@ -6141,17 +6142,7 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Spark loop mirrors the oracle's unrolled CTEs; a
     localCheckpoint at the end keeps the returned plan from embedding
     8 copies of the edge subtree (q123 discipline)."""
-    from pyspark import StorageLevel
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(F.col("o_custkey").alias("hub"), F.col("l_partkey").alias("auth"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = edges.count()
+    edges, index = checkpointed_edges(spark, sf_dir, "q368_hits_hubs_authorities")
     # Driver-side fixed point while the DISTINCT edge relation fits the
     # driver budget (r11; guide §8 / §1.2 — the q398/union-find
     # precedent): then 16 half-step join+agg+checkpoint Spark jobs are
@@ -6163,16 +6154,10 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME Spark tail expressions below compute the rounded float score
     # either way. Bigger graphs keep the sort-merge loop — that is the
     # 100 TB path.
-    if 0 < n_edges and fits_on_driver("q368_hits_hubs_authorities", (n_edges, 2)):
+    if index is not None:
         import numpy as np
 
-        pdf = edges.toPandas()
-        hub_ids, hub_idx = np.unique(
-            pdf["hub"].to_numpy(np.int64), return_inverse=True
-        )
-        auth_ids, auth_idx = np.unique(
-            pdf["auth"].to_numpy(np.int64), return_inverse=True
-        )
+        hub_ids, hub_idx, auth_ids, auth_idx = index
         hv = np.full(len(hub_ids), _Q368_SCALE, dtype=np.int64)
         av = np.zeros(len(auth_ids), dtype=np.int64)
         for _ in range(_Q368_ITERS):
@@ -6190,7 +6175,6 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         )[:_Q368_TOPK]
         a = spark.createDataFrame(top_a, "auth long, av long")
         h = spark.createDataFrame(top_h, "hub long, hv long")
-        edges.unpersist()
         return _q368_rank_tail(a, h)
     h = edges.select("hub").distinct().select(
         "hub", F.lit(_Q368_SCALE).cast("long").alias("hv")
@@ -6222,9 +6206,7 @@ def q368_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hub",
             F.expr(f"CAST(raw * {_Q368_SCALE} div mx AS BIGINT)").alias("hv"),
         )
-    out = _q368_rank_tail(a, h)
-    edges.unpersist()
-    return out
+    return _q368_rank_tail(a, h)
 
 
 def _q368_rank_tail(a: DataFrame, h: DataFrame) -> DataFrame:

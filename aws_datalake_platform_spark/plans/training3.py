@@ -20,7 +20,8 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..functions.core import fits_on_driver, round_half_up
+from ..functions.core import round_half_up
+from .purchase_graph import checkpointed_edges, purchase_edges
 from .queries import register
 
 # ── q379: Cox proportional-hazards fit via exact-replay Newton ───────────────
@@ -496,8 +497,6 @@ def q381_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipf-tiny in practice), and each iteration is one equi-join +
     aggregate over it with a localCheckpoint to stop unrolled-lineage
     blowup (q368 discipline). No corpus rescan after the first pass."""
-    from pyspark import StorageLevel
-
     sc = _Q381_SCALE
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -520,12 +519,12 @@ def q381_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(adj.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("long").alias("wt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
     deg = (
         edges.groupBy("src")
         .agg(F.sum("wt").cast("long").alias("t"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
     s = deg.select(F.col("src").alias("w"), F.lit(sc).cast("long").alias("sv"))
     for _ in range(_Q381_ITERS):
@@ -552,7 +551,7 @@ def q381_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     wr = Window.orderBy(F.desc("sv"), "w")
-    out = (
+    return (
         s.select(
             F.row_number().over(wr).cast("long").alias("rank"),
             F.col("w").alias("word"),
@@ -562,9 +561,6 @@ def q381_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("rank")
         .localCheckpoint(eager=True)
     )
-    edges.unpersist()
-    deg.unpersist()
-    return out
 
 
 # ── q382: bipartite k-core peel of the customer-part graph ───────────────────
@@ -632,16 +628,7 @@ def q382_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the shrinking edge relation, localCheckpoint'ed per round so
     the unrolled plan stays linear (q368 discipline). Edges only ever
     shrink, so round cost is monotonically decreasing."""
-    from pyspark import StorageLevel
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(F.col("o_custkey").alias("hub"), F.col("l_partkey").alias("auth"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e, index = checkpointed_edges(spark, sf_dir, "q382_kcore_peel")
     # Measured and rejected (r10): broadcasting the degree-filter
     # relations into the two joins. The checkpointed cur relation is
     # AQE-coalesced to ~1 cached partition at sf0.1, so broadcast joins
@@ -654,17 +641,10 @@ def q382_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at that size (r10 scaling block: 8 cores beat 32 at ratio 0.80).
     # The peel is integer set algebra — every output column is an exact
     # count — so the replay is bit-identical by construction.
-    n_edges_total = e.count()
-    if 0 < n_edges_total and fits_on_driver("q382_kcore_peel", (n_edges_total, 2)):
+    if index is not None:
         import numpy as np
 
-        pdf = e.toPandas()
-        hub_ids, hub_idx = np.unique(
-            pdf["hub"].to_numpy(np.int64), return_inverse=True
-        )
-        auth_ids, auth_idx = np.unique(
-            pdf["auth"].to_numpy(np.int64), return_inverse=True
-        )
+        hub_ids, hub_idx, auth_ids, auth_idx = index
         alive = np.ones(len(hub_idx), dtype=bool)
         out_rows = []
         for r in range(1, _Q382_ROUNDS + 1):
@@ -675,7 +655,6 @@ def q382_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             nh = int(np.unique(hub_idx[alive]).size)
             na = int(np.unique(auth_idx[alive]).size)
             out_rows.append((r, nh, na, ne))
-        e.unpersist()
         return spark.createDataFrame(
             out_rows, "round long, n_customers long, n_parts long, n_edges long"
         ).orderBy("round")
@@ -696,7 +675,6 @@ def q382_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("ne"),
         ).collect()[0]
         rows.append((r, agg["nh"] or 0, agg["na"] or 0, agg["ne"]))
-    e.unpersist()
     return spark.createDataFrame(
         rows, "round long, n_customers long, n_parts long, n_edges long"
     ).orderBy("round")
@@ -2043,13 +2021,7 @@ def q393_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: distinct-edge relation, two degree aggregates, two
     equi-joins back, one 6-number moment rollup (map-side
     combinable). Degree relations broadcast when small."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(F.col("o_custkey").alias("hub"), F.col("l_partkey").alias("auth"))
-        .distinct()
-    )
+    e = purchase_edges(spark, sf_dir)
     hd = e.groupBy("hub").agg(F.count(F.lit(1)).cast("long").alias("dh"))
     ad = e.groupBy("auth").agg(F.count(F.lit(1)).cast("long").alias("da"))
     ed = e.join(hd, "hub").join(ad, "auth").select(
@@ -2167,17 +2139,7 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: each half-step is one equi-join + count + per-node argmax
     over the distinct-edge relation, localCheckpoint'ed so the
     unrolled plan stays linear (q368 discipline)."""
-    from pyspark import StorageLevel
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(F.col("o_custkey").alias("hub"), F.col("l_partkey").alias("auth"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = e.count()
+    e, index = checkpointed_edges(spark, sf_dir, "q394_label_propagation")
     # Driver-side fixed point while the DISTINCT edge relation fits the
     # driver budget (r11; guide §8 — q398/union-find precedent): the r10
     # scaling block measured 8 cores FASTER than 32 here (ratio 0.84),
@@ -2186,16 +2148,10 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmax (count desc, label asc) is pure integer algebra, so the
     # driver replay is bit-identical; every output column is an exact
     # integer. Bigger graphs keep the sort-merge loop — the 100 TB path.
-    if 0 < n_edges and fits_on_driver("q394_label_propagation", (n_edges, 2)):
+    if index is not None:
         import numpy as np
 
-        pdf = e.toPandas()
-        hub_ids, hub_idx = np.unique(
-            pdf["hub"].to_numpy(np.int64), return_inverse=True
-        )
-        auth_ids, auth_idx = np.unique(
-            pdf["auth"].to_numpy(np.int64), return_inverse=True
-        )
+        hub_ids, hub_idx, auth_ids, auth_idx = index
         # label universe = initial hub labels (labels only ever copy);
         # lbl_pos is ascending in label VALUE, so index order == the
         # (count desc, label asc) tie-break order on values
@@ -2235,7 +2191,6 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [
             (rk + 1, lbl, c, p) for rk, (lbl, c, p) in enumerate(ranked)
         ]
-        e.unpersist()
         return spark.createDataFrame(
             rows, "rank long, community long, n_customers long, n_parts long"
         ).orderBy("rank")
@@ -2282,7 +2237,7 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wr = Window.orderBy(F.desc(F.col("nc") + F.col("np")), "lbl")
-    out = (
+    return (
         sizes.select(
             F.row_number().over(wr).cast("long").alias("rank"),
             F.col("lbl").cast("long").alias("community"),
@@ -2293,8 +2248,6 @@ def q394_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("rank")
         .localCheckpoint(eager=True)
     )
-    e.unpersist()
-    return out
 
 
 # ── q395: Croston intermittent-demand forecast for the hottest part ──────────

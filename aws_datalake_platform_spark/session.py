@@ -57,16 +57,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Let AQE re-plan output partitioning INSIDE cached plans (off by
-        # default): iterative operators (connected components, PageRank)
-        # persist tiny label/edge relations each round, and without this
-        # every round's joins/aggregates run at the full shuffle-partition
-        # fan-out — measured 4.6 s of task-scheduling overhead for a
-        # 256-edge propagation at sf0.1. Trade-off (why Spark defaults it
-        # off): a cached plan's partitioning may no longer match a later
-        # consumer's expectation, costing a re-shuffle — irrelevant here
-        # because cached relations are either iteration-internal or tiny.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -160,6 +160,20 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+def test_distributed_connected_components_leaves_nothing_cached(spark, monkeypatch):
+    """The propagation loop checkpoints its rounds instead of caching
+    them, so the distributed path leaves Spark's cache as it found it."""
+    from aws_datalake_platform_spark.functions import core
+    from aws_datalake_platform_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(core, "DRIVER_COLLECT_BYTES", 0)
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame([(1, 2), (3, 2), (10, 11)], "doc_a long, doc_b long")
+    got = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_simhash_cap_star_links_degenerate_corpus(spark):
     """SimHash twin of the MinHash cap test (added after the sf1 proof
     found the band self-join uncapped): identical docs land in one bucket

@@ -5,19 +5,25 @@ call neither launches an inference job nor recompiles."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import shutil
 import subprocess
 import sys
 import uuid
 from pathlib import Path
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from aws_datalake_platform_spark.catalog import load_table
+from aws_datalake_platform_spark.plans.queries import QUERY_REGISTRY
 
 from .conftest import SF_SMOKE
+from .oracle import compare, duckdb_conn
 
 
 def _load_jobs(spark, sf_dir: str, name: str):
@@ -97,3 +103,82 @@ def test_repeated_query_mix_does_not_recompile():
     compiles = json.loads(out.stdout.strip().splitlines()[-1])
     assert compiles[0] > 100, compiles
     assert compiles[1] <= 0.05 * compiles[0], compiles
+
+
+# Each case appends an exact copy of every 20th row under a new id, so
+# the rewritten table has more near-duplicate pairs than the first read.
+_REWRITES = {
+    "q24": ("q24_minhash_lsh_dedup", "documents",
+            "doc_id + 1000000 AS doc_id, text, lang, source, n_chars", "doc_id"),
+    "q59": ("q59_embedding_near_dup_lsh", "embeddings",
+            "vec_id + 1000000 AS vec_id, embedding, label", "vec_id"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REWRITES))
+def test_rewritten_table_drops_cached_features(spark, tmp_path, case):
+    """The LSH detectors leave their feature relation in Spark's cache so a
+    repeat call on an unchanged table reuses it; a table rewritten in
+    place must not be answered from the old table's features."""
+    name, table, copy_cols, key = _REWRITES[case]
+    for f in Path(SF_SMOKE).glob("*.parquet"):
+        shutil.copy(f, tmp_path / f.name)
+    spec = QUERY_REGISTRY[name]
+    spec.fn(spark, str(tmp_path)).collect()
+
+    path = tmp_path / f"{table}.parquet"
+    staged = tmp_path / "rewrite.tmp"
+    with duckdb.connect() as con:
+        con.execute(
+            f"COPY (SELECT * FROM '{path}' UNION ALL SELECT {copy_cols} "
+            f"FROM '{path}' WHERE {key} % 20 = 0) TO '{staged}' (FORMAT parquet)"
+        )
+    os.replace(staged, path)
+
+    con = duckdb_conn(str(tmp_path))
+    try:
+        ok, msg = compare(spec.fn(spark, str(tmp_path)), con, spec.sql)
+    finally:
+        con.close()
+    assert ok, f"{name} after rewriting {table}: {msg}"
+
+
+# The relations the package caches across calls (a repeat call on an
+# unchanged table reuses them), as (module, enclosing function). Reuse
+# inside one call goes through localCheckpoint, which needs no release.
+_PERSIST_SITES = [
+    ("operators/dedup.py", "minhash_lsh_pairs"),
+    ("operators/dedup.py", "simhash_near_dup_pairs"),
+    ("operators/similarity.py", "embedding_near_dup_pairs_lsh"),
+    # Spark requires a cached relation for a query that reads only the
+    # corrupt-record column; the function releases it itself
+    ("sources/io.py", "_read_dead_lettered"),
+]
+
+
+def _call_sites(*methods: str) -> list[tuple[str, str]]:
+    """One (module, innermost enclosing function) per call of ``methods``
+    anywhere in the package."""
+    pkg = Path(__file__).resolve().parents[1] / "aws_datalake_platform_spark"
+    sites = []
+
+    def visit(node: ast.AST, module: str, fn: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in methods
+        ):
+            sites.append((module, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, module, fn)
+
+    for path in pkg.rglob("*.py"):
+        visit(ast.parse(path.read_text(), str(path)), path.relative_to(pkg).as_posix(), "")
+    return sorted(sites)
+
+
+def test_persist_sites_are_the_named_ones():
+    assert _call_sites("persist", "cache") == sorted(_PERSIST_SITES)
+    assert _call_sites("unpersist") == [("sources/io.py", "_read_dead_lettered")]
